@@ -10,6 +10,12 @@ import org.apache.spark.sql.SparkSession
   * pays JIT/codegen compilation once, outside the measured loop.
   */
 object Bench {
+  /** Fixed-point `v` with `digits` decimals in the ROOT locale: the
+    * machine-read output must not follow the JVM's locale (a comma
+    * decimal separator breaks the JSON). */
+  private def fmt(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -199,8 +205,8 @@ object Bench {
           else if (round == 0) "unadjudicated"
           else if (normRatio <= 1.15) "drift"
           else "plan_suspect"
-        f"""{"query":"$n","prev":$p%.3f,"cur":$c%.3f,"ratio":$r%.2f,""" +
-          f""""ab_min":$bestQ%.3f,"ab_norm_ratio":$normRatio%.2f,""" +
+        s"""{"query":"$n","prev":${fmt(p, 3)},"cur":${fmt(c, 3)},"ratio":${fmt(r, 2)},""" +
+          s""""ab_min":${fmt(bestQ, 3)},"ab_norm_ratio":${fmt(normRatio, 2)},""" +
           s""""verdict":"$verdict"}"""
       }
       .mkString("[", ",", "]")
@@ -221,7 +227,7 @@ object Bench {
     // "[success]" trailer is suppressed in build.sbt for the same reason):
     // same minima as ever in `queries` (ms precision — the raw doubles are
     // in the file), nothing added, nothing removed.
-    def ms(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
+    def ms(v: Double): String = if (v < 0) "-1" else fmt(v, 3)
     val qsLine = results.toSeq.sortBy(_._1)
       .map { case (k, (v, ok)) => "\"" + k + "\":" + (if (ok) ms(v) else "-1") }
       .mkString("{", ",", "}")

@@ -350,17 +350,21 @@ object Profiling {
     val w = Window.orderBy(col(orderCol))
     // one shared ordered pass for every column (the runLengthAudit
     // one-sort treatment — the global sort is this audit's cost)
-    val desc = df.select(col(orderCol) +: valueCols.map(col): _*)
-      .select(valueCols.map(v =>
+    // value columns are aliased v<i>_, so every staged name is unique: a
+    // column listed twice would otherwise make its desc_/d_ names collide
+    val vs = valueCols.indices.map(i => s"v${i}_")
+    val desc = df.select(col(orderCol) +: valueCols.zip(vs).map { case (v, a) =>
+        col(v).as(a) }: _*)
+      .select(vs.map(v =>
         when(lag(col(v), 1).over(w) > col(v), 1L).otherwise(0L)
-          .as(s"desc_${v}_")): _*)
+          .as(s"desc_${v}")): _*)
     val one = desc.agg(count(lit(1)).as("n_rows"),
-      valueCols.map(v => sum(col(s"desc_${v}_")).as(s"d_${v}_")): _*)
+      vs.map(v => sum(col(s"desc_${v}")).as(s"d_${v}")): _*)
       .localCheckpoint()
-    valueCols.map { v =>
+    valueCols.zip(vs).map { case (v, a) =>
       one.select(lit(v).as("value_col"), col("n_rows"),
-        col(s"d_${v}_").as("n_descents"),
-        (col(s"d_${v}_") === 0).as("sorted"))
+        col(s"d_${a}").as("n_descents"),
+        (col(s"d_${a}") === 0).as("sorted"))
     }.reduce(_ unionByName _)
   }
 
@@ -384,16 +388,19 @@ object Profiling {
     // (r13 TimeOne: 3.41 -> 1.47 s warm at 3 columns on lineitem sf0.1).
     // The 1-row aggregate is checkpointed so the per-column output
     // branches don't re-execute the sort; run math is unchanged.
-    val chg = df.select(orderCols.map(col) ++ valueCols.map(col): _*)
-      .select(valueCols.map(v =>
+    // value columns aliased v<i>_, as in monotonicityAudit
+    val vs = valueCols.indices.map(i => s"v${i}_")
+    val chg = df.select(orderCols.map(col) ++ valueCols.zip(vs).map {
+        case (v, a) => col(v).as(a) }: _*)
+      .select(vs.map(v =>
         when(col(v) <=> lag(col(v), 1).over(w), 0L).otherwise(1L)
-          .as(s"chg_${v}_")): _*)
+          .as(s"chg_${v}")): _*)
     val one = chg.agg(count(lit(1)).as("n_rows"),
-      valueCols.map(v => sum(col(s"chg_${v}_")).as(s"runs_${v}_")): _*)
+      vs.map(v => sum(col(s"chg_${v}")).as(s"runs_${v}")): _*)
       .localCheckpoint()
-    valueCols.map { v =>
+    valueCols.zip(vs).map { case (v, a) =>
       one.select(lit(v).as("value_col"), col("n_rows"),
-        col(s"runs_${v}_").as("n_runs"))
+        col(s"runs_${a}").as("n_runs"))
         .select(col("value_col"), col("n_rows"), col("n_runs"),
           expr("(n_rows * 1000) div greatest(n_runs, 1L)").as("avg_run_x1000"))
     }.reduce(_ unionByName _)

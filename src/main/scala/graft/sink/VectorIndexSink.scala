@@ -88,7 +88,8 @@ object VectorIndexSink {
     val payloadCols = memories.columns.filterNot(Set("memory_id", "embedding")).toSeq
     val prepared = memories.select(
       col("memory_id").cast("string").as("memory_id"),
-      col("embedding"),
+      // the wire point is float: Ingest.toMemories emits array<double>
+      col("embedding").cast("array<float>").as("embedding"),
       map_from_arrays(
         typedLit(payloadCols),
         array(payloadCols.map(c => col(c).cast("string")): _*)).as("payload"))

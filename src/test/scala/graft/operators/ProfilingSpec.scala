@@ -151,4 +151,19 @@ class ProfilingSpec extends SparkSpec {
     // the singleton group is its own median, MAD 0, no outliers
     assert(r("b") == ((1L, 7.0, 0.0, 0L)))
   }
+
+  test("monotonicityAudit/runLengthAudit: a value column listed twice, or also the order column") {
+    import spark.implicits._
+    // t orders the rows; t itself is sorted with 4 runs, v descends once
+    // (3 -> 1) and runs as (3)(1 1)(2). Listing v twice made the staged
+    // per-column names collide (an ambiguous reference)
+    val df = Seq((1L, 3L), (2L, 1L), (3L, 1L), (4L, 2L)).toDF("t", "v")
+    val mono = Profiling.monotonicityAudit(df, "t", Seq("t", "v", "v"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+    assert(mono.toSeq.sortBy(_._1) ==
+      Seq(("t", 4L, 0L, true), ("v", 4L, 1L, false), ("v", 4L, 1L, false)))
+    val rle = Profiling.runLengthAudit(df, Seq("t"), Seq("t", "v", "v"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(rle.toSeq.sortBy(_._1) == Seq(("t", 4L, 4L), ("v", 4L, 3L), ("v", 4L, 3L)))
+  }
 }

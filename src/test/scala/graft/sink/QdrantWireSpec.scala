@@ -164,6 +164,16 @@ class QdrantWireSpec extends SparkSpec {
         .select(col("embedding")).head().getSeq[Float](0)
       val got = (0 until 4).map(i => m2.path("vector").get(i).floatValue())
       assert(got == expected)
+      // the uncast array<double> that Ingest.toMemories emits upserts the
+      // same float vector
+      fake.requests.clear()
+      indexBatch(df.withColumn("embedding", Embedder.embed(col("memory_id"), 4)),
+        "memories", () => new QdrantHttpClient(base))
+      val uncast = mapper.readTree(fake.requests.asScala.toSeq
+        .filter(_.path == "/collections/memories/points").head.body).path("points")
+      val v2 = (0 until uncast.size()).map(uncast.get)
+        .find(_.path("id").asText() == U2).get.path("vector")
+      assert((0 until 4).map(i => v2.get(i).floatValue()) == expected)
     } finally fake.stop()
   }
 

@@ -175,6 +175,9 @@ class StreamingIngestSpec extends SparkSpec {
         """{"memory_id":"m3","session_id":"s1","tool":"purchase","timestamp":"2024-01-01T00:00:09Z","value":3.0}
           |""".stripMargin)
       q.processAllAvailable()
+      // each micro-batch reads its staged lines once: the second batch,
+      // which also reads the store, still reports its one input line
+      assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq == Seq(2L, 1L))
     } finally q.stop()
     val got = spark.read.parquet(store)
       .select("memory_id", "sequence_order", "preceding_memory_id")
