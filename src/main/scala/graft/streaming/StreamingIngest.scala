@@ -304,9 +304,14 @@ object StreamingIngest {
               StructField("next_seq", IntegerType))))
           (emptyTails, batch)
         } else {
+          // the batch's sessions as a literal set: one job over the
+          // persisted batch, after which the plan scans the batch once
+          // (a semi-join side scans it in every branch that reads the
+          // store — 13 jobs per micro-batch against 9)
+          val sessions = batch.select("session_id").distinct()
+            .collect().map(_.getString(0))
           val stored = spark.read.parquet(storePath)
-            .join(broadcast(batch.select("session_id").distinct()),
-              Seq("session_id"), "left_semi")
+            .where(col("session_id").isin(sessions: _*))
           val t = MemoryModel.lastMemoryPerSession(stored)
             .select(col("session_id"), col("last_memory_id"),
               col("next_seq").cast("int").as("next_seq"))
