@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: every SparkEntry query against SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -18,31 +17,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Gate-scale streaming partition pins (r12 measurements: staged
-      // stateful gates at p4, frequent-pairs fold at p8). The harness owns
-      // these numbers; the operators read the conf and run with the
-      // session's own sizing when it is unset (production).
-      .config("graft.stream.parts",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-      .config("graft.stream.parts.fp",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_FP", "8"))
-      .config("graft.stream.parts.ivj",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_IVJ", "2"))
-      // Incremental changelog per commit instead of a full RocksDB
-      // snapshot — the recommended production mode for RocksDB state
-      // stores, and measured ~5-9% off the heavier TWS gates here
-      // (AbConfR13, r13): stream_tws_sessions 4.39 -> 4.00 s,
-      // stream_tws_asof 3.47 -> 3.26 s, others flat.
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GateSession()
     // ERROR: bench output is the one JSON line; expected-at-this-scale
     // warnings (e.g. bounded-candidate-set windows) otherwise drown it
     spark.sparkContext.setLogLevel("ERROR")

@@ -20,6 +20,15 @@ import org.apache.spark.sql.functions._
   */
 object MemoryModel {
 
+  /** The one session order behind [[fromEvents]] and [[attachSequence]]:
+    * event time, then the numeric id, then the id string. The numeric key
+    * orders the testdata's integer ids as numbers; for ids that are not
+    * numeric (the reference's UUIDv4 memory ids, storage.py:171) it is
+    * null — `try_cast`, since an ANSI `cast` throws on them — and the
+    * string key breaks timestamp ties the same way [[sessionize]] does. */
+  private val sessionOrder = Window.partitionBy("session_id")
+    .orderBy(col("timestamp"), col("memory_id").try_cast("long"), col("memory_id"))
+
   /** events → memories: the FULL payload envelope + sessionization
     * (reference: storage.py:154-191 `memory_payload`).
     *
@@ -42,16 +51,13 @@ object MemoryModel {
     *   real data. `archetype_title` capitalizes the tool name (the
     *   reference reads archetype.get("title")).
     */
-  def fromEvents(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy("session_id")
-      .orderBy(col("timestamp"), col("memory_id").cast("long"))
+  def fromEvents(events: DataFrame): DataFrame =
     envelope(events)
-      .withColumn("sequence_order", row_number().over(w))
-      .withColumn("preceding_memory_id", lag(col("memory_id"), 1).over(w))
+      .withColumn("sequence_order", row_number().over(sessionOrder))
+      .withColumn("preceding_memory_id", lag(col("memory_id"), 1).over(sessionOrder))
       .select("memory_id", "session_id", "tool", "timestamp", "title", "context",
         "content", "sequence_order", "preceding_memory_id", "parameters",
         "frames", "meta", "value", "props")
-  }
 
   /** The payload envelope of [[fromEvents]] WITHOUT the sessionization
     * window — a pure per-row projection, no shuffle. This is the input a
@@ -90,8 +96,8 @@ object MemoryModel {
     *
     * Correctness: both window columns depend only on same-session rows,
     * and the scoped pass keeps EVERY row of each touched session, so the
-    * numbers equal the global window's — bit-for-bit (same
-    * (timestamp, numeric-id) ordering as [[fromEvents]]).
+    * numbers equal the global window's — bit-for-bit (the same
+    * [[sessionOrder]] as [[fromEvents]]).
     *
     * Physical shape at 100 TB: a top-k query's hits touch ≤k sessions, so
     * the session list broadcasts, the envelope re-scan is a semi-join
@@ -116,11 +122,9 @@ object MemoryModel {
     val sess = h.select(col("session_id")).distinct()
     val scoped = envelope.select("memory_id", "session_id", "timestamp")
       .join(broadcast(sess), Seq("session_id"), "left_semi")
-    val w = Window.partitionBy("session_id")
-      .orderBy(col("timestamp"), col("memory_id").cast("long"))
     val seq = scoped
-      .withColumn("sequence_order", row_number().over(w))
-      .withColumn("preceding_memory_id", lag(col("memory_id"), 1).over(w))
+      .withColumn("sequence_order", row_number().over(sessionOrder))
+      .withColumn("preceding_memory_id", lag(col("memory_id"), 1).over(sessionOrder))
       .select(col("memory_id").as("sq_id_"), col("sequence_order"),
         col("preceding_memory_id"))
     h.join(broadcast(seq), h("memory_id") === col("sq_id_"), "left")

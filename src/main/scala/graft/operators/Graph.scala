@@ -596,7 +596,7 @@ object Graph {
       .select(col("node"), lit(scale).as("h")).localCheckpoint()
     // Each round attaches a (node, score) table to e twice; see
     // [[attachFor]] — broadcast the node-bounded scores so e is never
-    // shuffled by the iteration (r13 AbHitsR13: 2.53 -> 2.18 s, results
+    // shuffled by the iteration (OPTIMIZATION_r13.md §8: 2.53 -> 2.18 s, results
     // row-identical; round-1 plan 4 SortMergeJoin -> 4 BroadcastHashJoin,
     // plans/r13/graph_hits_round_*.txt).
     val attach = attachFor(e)

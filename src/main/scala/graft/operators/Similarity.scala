@@ -1250,7 +1250,7 @@ object Similarity {
     // candidates four times per round. Broadcast the small sides instead
     // (guide §3.1, the r13 hits/nsw playbook): candidates are then never
     // shuffled for the attach; only the final per-q window moves them
-    // (r13 AbDescentR13: descent rounds 1.36 -> 0.96 s at sf0.1,
+    // (OPTIMIZATION_r13.md §10: descent rounds 1.36 -> 0.96 s at sf0.1,
     // results row-identical). Guarded: one count() job against four
     // saved exchanges per round; past ~500k vectors (store ≈ 130 MB at
     // dims 64, edge list ≈ 2k·n rows) the default strategy returns.

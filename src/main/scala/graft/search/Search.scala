@@ -137,8 +137,8 @@ object Search {
     * (a single-partition sort), so the exact form is only valid over a
     * bounded candidate pool: `maxCandidates` is enforced with a
     * limit-gated count (the gate job scans at most maxCandidates+1 rows),
-    * and anything larger must go through [[rrfFuseTopM]] — the fusion
-    * shape that survives unbounded inputs.
+    * and anything larger must go through [[rrfFuseTopMScores]] — the
+    * fusion shape that survives unbounded inputs.
     */
   def rrfFuse(
       scored: DataFrame,
@@ -153,7 +153,7 @@ object Search {
     val n = scored.select(tieBreak).limit(maxCandidates + 1).count()
     require(n <= maxCandidates,
       s"rrfFuse ranks globally in a single partition and got more than " +
-        s"$maxCandidates candidate rows — pre-prune the pool or use rrfFuseTopM")
+        s"$maxCandidates candidate rows — pre-prune the pool or use rrfFuseTopMScores")
     val wDense = Window.orderBy(denseScore.desc, tieBreak)
     val wKw = Window.orderBy(keywordScore.desc, tieBreak)
     scored
@@ -169,71 +169,23 @@ object Search {
     * 1/(k + rank-in-list), 0 beyond the list — exactly how RRF is defined
     * over bounded retrieval lists (and how the reference behaves: fastembed
     * fuses the dense and sparse top-M lists, not the whole collection).
-    *
-    * Physical shape at any scale: each top-M list is a
-    * `TakeOrderedAndProject` (per-partition heaps, k·P rows to the driver —
-    * no global sort, no single-partition window), ranks are assigned on the
-    * driver over m rows, and the fused scores join back as a broadcast.
     * For a row present in a list, its list rank equals its global rank —
     * every row that outranks it is in the list too — so the pruning never
     * distorts the ranks it does report.
     *
-    * The (tb, dense, kw) projection is persisted across the two top-M
-    * collects, so the upstream scoring pipeline (embed + cosine at scale)
-    * materializes ONCE for both lists instead of once per list; the final
-    * broadcast-join pass over `scored` is the only other evaluation.
-    *
-    * `tieBreak` must be a numeric (long-castable) unique id.
-    */
-  def rrfFuseTopM(
-      scored: DataFrame,
-      denseScore: Column,
-      keywordScore: Column,
-      tieBreak: Column,
-      m: Int,
-      k: Int = 60): DataFrame = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val proj = scored
-      .select(tieBreak.cast("long").as("tb"),
-        denseScore.cast("double").as("ds"),
-        keywordScore.cast("double").as("ks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def rankList(score: String): DataFrame = {
-      val top = proj
-        .orderBy(col(score).desc, col("tb"))
-        .limit(m)
-        .collect()
-      top.zipWithIndex.map { case (r, i) => (r.getLong(0), i + 1) }.toSeq
-        .toDF("tb", "rank")
-    }
-    val dr = rankList("ds").withColumnRenamed("rank", "dense_rank_")
-    val kr = rankList("ks").withColumnRenamed("rank", "kw_rank_")
-    proj.unpersist(blocking = false)
-    scored
-      .withColumn("tb_", tieBreak.cast("long"))
-      .join(broadcast(dr), col("tb_") === dr("tb"), "left").drop("tb")
-      .join(broadcast(kr), col("tb_") === kr("tb"), "left").drop("tb")
-      .withColumn("score",
-        coalesce(lit(1.0) / (lit(k) + col("dense_rank_")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(k) + col("kw_rank_")), lit(0.0)))
-      .drop("tb_", "dense_rank_", "kw_rank_")
-  }
-
-  /** Fused scores for the union of both top-M lists ONLY — the form of
-    * [[rrfFuseTopM]] that never re-evaluates `scored`. The expensive
+    * Returns (tb, score) for the union of both lists ONLY. The expensive
     * scoring pipeline (embed + cosine at scale) materializes exactly once
-    * — the persisted projection feeds both top-M collects — and
-    * everything after runs on ≤ 2m driver rows. A row outside both lists
-    * scores 0 under bounded-list RRF and can never outrank a list member,
-    * so any top-k consumer with k ≤ m reattaches payload columns via a
-    * broadcast id-join against the returned (tb, score) table instead of
-    * paying a second scoring pass; the reattach scan is column-pruned to
-    * the id + payload (the embedding pipeline never runs again).
+    * — the persisted (tb, dense, kw) projection feeds both top-M collects,
+    * each a `TakeOrderedAndProject` (per-partition heaps, no global sort)
+    * — and everything after runs on ≤ 2m driver rows. A row outside both
+    * lists scores 0 and can never outrank a list member, so any top-k
+    * consumer with k ≤ m reattaches payload columns via a broadcast
+    * id-join against the returned table instead of paying a second
+    * scoring pass; the reattach scan is column-pruned to the id + payload
+    * (the embedding pipeline never runs again).
     *
-    * Like [[rrfFuseTopM]], `tieBreak` must be a numeric UNIQUE id — a
-    * duplicated id would collapse to one rank per list here (last wins)
-    * where the join form emits one row per input row.
+    * `tieBreak` must be a numeric (long-castable) UNIQUE id — a duplicated
+    * id would collapse to one rank per list.
     */
   def rrfFuseTopMScores(
       scored: DataFrame,

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * last memory before every insert (storage.py:113-143, server.py:96-103):
   * one Qdrant round-trip per event, arrival-order semantics. Here the same
   * state lives either
-  *  - in [[sequenced]]'s `flatMapGroupsWithState` per-session state (one
+  *  - in [[sequencedTws]]'s `transformWithState` per-session state (one
   *    shuffle per micro-batch, state store holds (nextSeq, lastId) per
   *    session — bounded, keyed, checkpointed), or
   *  - in the store itself via [[ingestBatch]] (foreachBatch: window over
@@ -43,14 +43,15 @@ object StreamingIngest {
 
   final case class SeqState(nextSeq: Int, lastId: Option[String])
 
-  /** [[sequenced]] re-expressed on Spark 4's `transformWithState` — the
-    * arbitrary-state API that supersedes `flatMapGroupsWithState`:
+  /** Per-session sequence assignment with keyed state — the streaming
+    * twin of [[MemoryModel.sessionize]] — on Spark 4's `transformWithState`,
+    * the arbitrary-state API that supersedes `flatMapGroupsWithState`:
     * typed, NAMED state variables with per-variable encoders and TTL
     * (vs one opaque state blob), timers as first-class citizens, and a
     * RocksDB-backed store (the harness pins the provider — TWS requires
-    * it). Same semantics as [[sequenced]] — per-session gapless
-    * sequence, arrival order normalized to (ts, memoryId) — so the same
-    * oracle checks both; what's exercised is the NEW engine surface:
+    * it). Per-session gapless sequence, arrival order normalized to
+    * (ts, memoryId); state per session is two fields, so the store scales
+    * with live sessions, not history. The engine surface exercised:
     * init-time state registration via `getHandle.getValueState`,
     * `exists()/get()/update()` row handling, and state carried across
     * micro-batches by the TWS operator.
@@ -248,29 +249,6 @@ object StreamingIngest {
       .where(col("userId") >= 0)
   }
 
-  /** Per-session sequence assignment with keyed state — the streaming twin
-    * of [[MemoryModel.sessionize]]. State per session is two fields; the
-    * state store scales with live sessions, not history.
-    */
-  def sequenced(calls: Dataset[ToolCall]): Dataset[SequencedCall] = {
-    import calls.sparkSession.implicits._
-    calls
-      .groupByKey(_.sessionId)
-      .flatMapGroupsWithState[SeqState, SequencedCall](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sid: String, it: Iterator[ToolCall], state: GroupState[SeqState]) =>
-          var st = state.getOption.getOrElse(SeqState(1, None))
-          val out = it.toSeq.sortBy(c => (c.ts.getTime, c.memoryId)).map { c =>
-            val r = SequencedCall(c.memoryId, sid, c.tool, c.ts, c.value,
-              st.nextSeq, st.lastId)
-            st = SeqState(st.nextSeq + 1, Some(c.memoryId))
-            r
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
   /** foreachBatch body: append a micro-batch to the parquet store,
     * continuing each session's sequence from the stored maximum (A1) and
     * chaining preceding_memory_id across the batch boundary (J1).
@@ -434,7 +412,7 @@ object StreamingIngest {
     *
     * Shape: union the two streams into one keyed envelope, then ONE
     * `flatMapGroupsWithState` — per key the state is the bounded, sorted
-    * update history (two fields per update), exactly like [[sequenced]]
+    * update history (two fields per update), so like [[sequencedTws]] it
     * scales with live keys, not stream history. Within a micro-batch,
     * events apply in event-time order with updates before ticks at equal
     * timestamps (inclusive `<=` semantics, matching the batch operator and

@@ -105,4 +105,25 @@ class MemoryModelSpec extends SparkSpec {
     assert(got == Set(("3", 1)))
     release()
   }
+
+  test("attachSequence breaks timestamp ties like sessionize on UUID ids") {
+    import spark.implicits._
+    // the reference's memory ids are UUIDv4: the numeric cast is null for
+    // every row, so at a shared timestamp only the id string orders them.
+    // Rows arrive in reverse string order, three of them tied.
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:01")
+    val t1 = Timestamp.valueOf("2024-01-01 00:00:02")
+    val mem = Seq(
+      ("f47ac10b-58cc-4372-a567-0e02b2c3d479", t1),
+      ("c9bf9e57-1685-4c89-bafb-ff5af830be8a", t1),
+      ("9b2d7f3e-4a1c-4e8b-8f6d-2a5c3b1e0d97", t1),
+      ("16fd2706-8baf-433b-82eb-8c7fada847da", t0))
+      .toDF("memory_id", "timestamp").withColumn("session_id", lit("s"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("memory_id", "sequence_order", "preceding_memory_id").collect()
+        .map(r => (r.getString(0), r.getInt(1), Option(r.getString(2)))).toSet
+    val (attached, release) = MemoryModel.attachSequenceManaged(mem, mem)
+    assert(rows(attached) == rows(MemoryModel.sessionize(mem)))
+    release()
+  }
 }

@@ -12,30 +12,6 @@ class StreamingIngestSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  test("sequenced: per-session sequence numbers continue across micro-batches") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[ToolCall]
-    val out = sequenced(input.toDS())
-    val q = out.writeStream.format("memory").queryName("seqd")
-      .outputMode(OutputMode.Append).start()
-    try {
-      input.addData(
-        ToolCall("m1", "s1", "click", ts("2024-01-01 00:00:01"), 1.0),
-        ToolCall("m2", "s1", "view", ts("2024-01-01 00:00:02"), 2.0),
-        ToolCall("m9", "s2", "click", ts("2024-01-01 00:00:03"), 3.0))
-      q.processAllAvailable()
-      input.addData(
-        ToolCall("m3", "s1", "purchase", ts("2024-01-01 00:10:00"), 4.0))
-      q.processAllAvailable()
-      val rows = spark.table("seqd").as[SequencedCall].collect()
-        .map(r => (r.memoryId, r.sequenceOrder, r.precedingMemoryId)).toSet
-      assert(rows == Set(
-        ("m1", 1, None), ("m2", 2, Some("m1")), ("m9", 1, None),
-        ("m3", 3, Some("m2")))) // continues s1's state across batches
-    } finally q.stop()
-  }
-
   test("sequencedTws: transformWithState ValueState continues across micro-batches") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -63,7 +39,7 @@ class StreamingIngestSpec extends SparkSpec {
           .map(r => (r.memoryId, r.sequenceOrder, r.precedingMemoryId)).toSet
         assert(rows == Set(
           ("m1", 1, None), ("m2", 2, Some("m1")), ("m9", 1, None),
-          ("m3", 3, Some("m2")))) // same contract as `sequenced`
+          ("m3", 3, Some("m2")))) // continues s1's state across batches
       } finally q.stop()
     } finally prev match {
       case Some(p) => spark.conf.set(providerKey, p)

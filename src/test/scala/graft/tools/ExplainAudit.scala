@@ -1,14 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit: PushedFilters / broadcast / codegen spans on headline
   * queries. `sbt "Test/runMain graft.tools.ExplainAudit"` */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.01"
     for (name <- Seq("q6_forecast_revenue", "q3_unshipped_orders",

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.functions.{Embedder, TextFunctions, VectorFunctions}
 import graft.search.Search
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Phase split for mem_search_hybrid_bm25 (r12 verdict item 6): does the
@@ -17,23 +17,17 @@ import org.apache.spark.sql.functions._
 object ProbeHybridPhases {
   def main(args: Array[String]): Unit = {
     val reps = if (args.nonEmpty) args(0).toInt else 3
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // gate constants (SparkEntry privates): SearchDims / SearchQueryText /
-    // Bm25K1 / Bm25B
-    val dims = 8
-    val qText = "Tool: purchase"
-    val k1 = 1.2
-    val b = 0.75
+    // the gate's own constants
+    val dims = graft.GateHelpers.SearchDims
+    val qText = graft.GateHelpers.SearchQueryText
+    val k1 = graft.GateHelpers.Bm25K1
+    val b = graft.GateHelpers.Bm25B
     val path = "/tmp/probe_hybrid_store"
 
-    def mem: DataFrame = graft.model.MemoryModel
-      .fromEvents(graft.Tables.events(s, d))
-      .withColumn("memory_id_num", col("memory_id").cast("long"))
+    def mem: DataFrame = graft.GateHelpers.memories(s, d)
 
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,15 +17,10 @@ import org.apache.spark.sql.functions._
 object ProbeSparsePhases {
   def main(args: Array[String]): Unit = {
     val reps = if (args.nonEmpty) args(0).toInt else 3
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // same shape the gate reads (SparkEntry.docs is private)
-    val docs = graft.Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
+    val docs = graft.GateHelpers.docs(s, d)
     val termK = 2
     val minSim = 0.3
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r12 probe: dedup_ssjoin_prefix cost split — candidate generation
@@ -10,9 +9,7 @@ import org.apache.spark.sql.functions._
   * shuffle) can possibly pay. */
 object ProbeSsjoinPhases {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     def t[T](label: String)(body: => T): T = {
@@ -23,8 +20,7 @@ object ProbeSsjoinPhases {
     }
     for (round <- 1 to 2) {
       println(s"ROUND $round")
-      val docs = s.read.parquet(s"$d/documents.parquet")
-        .repartition(s.sparkContext.defaultParallelism) // match SparkEntry.docs()
+      val docs = graft.GateHelpers.docs(s, d)
       // prefix-only candidate stage (replicates SetSimJoin.prefixIndex's
       // public shape: tokens -> 3-shingles -> df-ordered prefix -> self-
       // join -> distinct count), no full-index census, no verify

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-only census: parquet-scan count per gate (no execution except
   * what gate construction itself does). High counts flag the
   * fan-out-re-evaluation bug class — a derived relation feeding N lazy
@@ -12,9 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ScanCensus {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val skip = Set("catalog_tool_schemas")

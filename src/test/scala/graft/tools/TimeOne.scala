@@ -1,12 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+/** Times gates twice each at sf0.1 under the bench's own session
+  * (GateSession), so the plans timed are the plans Bench runs.
+  * `Test/runMain graft.tools.TimeOne <gate...>` */
 object TimeOne {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     for (name <- args; _ <- 1 to 2) {
