@@ -337,7 +337,8 @@ private[graft] object MemoryGates {
         |FROM ranked ORDER BY score DESC, event_id LIMIT 10""".stripMargin)),
 
     // Candidate-pruned RRF: each ranking contributes only its top-100 list
-    // (TakeOrderedAndProject + driver-side rank + broadcast join back) —
+    // (per-partition top-100 heaps merged on the driver in one job, then a
+    // broadcast join back) —
     // the fusion shape that survives 100 TB, vs mem_search_rrf's exact
     // global-rank form.
     Gate("mem_search_rrf_pruned", (s, d) => {

@@ -246,8 +246,8 @@ private[graft] object SearchGates {
     // ---- Vector search (S8/T1 + ANN scale path) ----
 
     // Sparse half of hybrid search made explicit (SURVEY §4.3): Okapi
-    // BM25 over the documents corpus — df/avgdl from two combiner
-    // aggregations, one (doc, term) scoring pass, decimal-summed.
+    // BM25 over the documents corpus — N/avgdl/df from one aggregate job,
+    // a per-document scoring projection, decimal-summed.
     Gate("search_bm25", (s, d) => {
       operators.Bm25.topK(docs(s, d), "text", "doc_id", Bm25Query, k = 20,
         k1 = Bm25K1, b = Bm25B)

@@ -1,8 +1,10 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The canonical memory store (SURVEY.md §1.4): one row per tool invocation.
   *
@@ -89,46 +91,59 @@ object MemoryModel {
       .select("memory_id", "session_id", "tool", "timestamp", "title", "context",
         "content", "parameters", "frames", "meta", "value", "props")
 
+  /** The most hits [[attachSequence]] collects to the driver: ten times
+    * the request schema's `limit` cap (100), and nowhere near a store. */
+  val MaxAttachHits = 1000
+
   /** Scoped sessionization for a pruned hit set — the SERVING-path twin of
     * [[fromEvents]]'s ingest window: recompute (sequence_order,
     * preceding_memory_id) over ONLY the sessions that contain a hit and
-    * left-join them onto the hits by memory_id.
+    * attach them to the hits by memory_id (left-join semantics: a hit the
+    * window does not find keeps NULLs).
     *
     * Correctness: both window columns depend only on same-session rows,
     * and the scoped pass keeps EVERY row of each touched session, so the
     * numbers equal the global window's — bit-for-bit (the same
     * [[sessionOrder]] as [[fromEvents]]).
     *
-    * Physical shape at 100 TB: a top-k query's hits touch ≤k sessions, so
-    * the session list broadcasts, the envelope re-scan is a semi-join
-    * (column-pruned to id/session/timestamp; partition- or file-prunable
-    * when the store is laid out by session), and the window shuffles only
-    * those sessions' rows — versus shuffling the ENTIRE store through the
-    * ingest window to rank 10 rows. The sf0.1 gate keeps hash-parity with
-    * the global-window oracle precisely because the two forms are equal.
+    * Physical shape: eager, and no cache. (1) collect the ≤k hits — the
+    * pruning subtree runs once; (2) window `envelope.where(session_id isin
+    * <hit sessions>)` — a literal in-list the scan can push down, so only
+    * those sessions' rows are shuffled, column-pruned to
+    * id/session/timestamp; (3) keep the window rows whose memory_id is a
+    * hit and collect them (≤k rows); (4) return the hits plus the two
+    * columns as a local DataFrame, whose view projection runs without a
+    * job. At 100 TB that is a per-query session lookup versus shuffling
+    * the ENTIRE store through the ingest window to rank 10 rows. The sf0.1
+    * gate keeps hash-parity with the global-window oracle precisely
+    * because the two forms are equal.
     */
-  def attachSequence(envelope: DataFrame, hits: DataFrame): DataFrame =
-    attachSequenceManaged(envelope, hits)._1
-
-  /** [[attachSequence]] plus the release handle for the hit-set cache.
-    * `hits` feeds BOTH the session-scope broadcast and the final join —
-    * without the persist the expensive pruning subtree (full-scan score +
-    * top-k) would compute twice, once per branch. The cache is bounded by
-    * the caller's limit (≤k rows), so holding it is the cheap side of the
-    * trade at any scale. */
-  def attachSequenceManaged(envelope: DataFrame,
-      hits: DataFrame): (DataFrame, () => Unit) = {
-    val h = hits.persist()
-    val sess = h.select(col("session_id")).distinct()
-    val scoped = envelope.select("memory_id", "session_id", "timestamp")
-      .join(broadcast(sess), Seq("session_id"), "left_semi")
-    val seq = scoped
+  def attachSequence(envelope: DataFrame, hits: DataFrame): DataFrame = {
+    // one job whatever the partitioning; no partition ships more than the
+    // bound plus the one row that proves it exceeded
+    val rows = hits.rdd.mapPartitions(_.take(MaxAttachHits + 1)).collect()
+    require(rows.length <= MaxAttachHits,
+      s"attachSequence collects its hits to the driver; more than " +
+        s"$MaxAttachHits hits — attach after the top-k, not over a store")
+    val idAt = hits.schema.fieldIndex("memory_id")
+    val sessionAt = hits.schema.fieldIndex("session_id")
+    def values(i: Int) = rows.filterNot(_.isNullAt(i)).map(_.get(i)).distinct.toSeq
+    val sessions = values(sessionAt)
+    val window = envelope.select("memory_id", "session_id", "timestamp")
+      .where(col("session_id").isin(sessions: _*))
       .withColumn("sequence_order", row_number().over(sessionOrder))
       .withColumn("preceding_memory_id", lag(col("memory_id"), 1).over(sessionOrder))
-      .select(col("memory_id").as("sq_id_"), col("sequence_order"),
-        col("preceding_memory_id"))
-    h.join(broadcast(seq), h("memory_id") === col("sq_id_"), "left")
-      .drop("sq_id_") -> (() => { h.unpersist(false); () })
+      .where(col("memory_id").isin(values(idAt): _*))
+      .select("memory_id", "sequence_order", "preceding_memory_id")
+    val found = (if (sessions.isEmpty) Array.empty[Row] else window.collect())
+      .groupBy(_.get(0))
+    val attached = rows.toSeq.flatMap { h =>
+      found.get(h.get(idAt)).fold(Seq(Row.fromSeq(h.toSeq :+ null :+ null)))(
+        _.toSeq.map(w => Row.fromSeq(h.toSeq :+ w.get(1) :+ w.get(2))))
+    }
+    val schema = StructType(hits.schema.fields ++
+      window.schema.fields.drop(1).map(_.copy(nullable = true)))
+    hits.sparkSession.createDataFrame(attached.asJava, schema)
   }
 
   /** Generic sessionization over canonical columns (memory_id, session_id,

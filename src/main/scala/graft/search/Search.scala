@@ -124,7 +124,9 @@ object Search {
     // `attach` enriches the PRUNED hit set before the view projection —
     // the hook scoped sessionization rides in on (a view needing
     // sequence_order over an unsessionized store attaches it for ≤k rows
-    // instead of windowing the whole store; MemoryModel.attachSequence).
+    // instead of windowing the whole store). MemoryModel.attachSequence
+    // runs eagerly: it collects the ≤k hits and their window columns and
+    // returns a local DataFrame, so the projection below starts no job.
     project(attach(hits), req.detail, now)
   }
 
@@ -173,16 +175,19 @@ object Search {
     * every row that outranks it is in the list too — so the pruning never
     * distorts the ranks it does report.
     *
-    * Returns (tb, score) for the union of both lists ONLY. The expensive
-    * scoring pipeline (embed + cosine at scale) materializes exactly once
-    * — the persisted (tb, dense, kw) projection feeds both top-M collects,
-    * each a `TakeOrderedAndProject` (per-partition heaps, no global sort)
-    * — and everything after runs on ≤ 2m driver rows. A row outside both
+    * Returns (tb, score) for the union of both lists ONLY. Both lists come
+    * from ONE pass over the (tb, dense, kw) projection, one job and no
+    * cache: every partition keeps a bounded top-m heap per list, and the
+    * driver merges the ≤ 2m rows per partition into the two lists.
+    * Everything after runs on ≤ 2m driver rows. A row outside both
     * lists scores 0 and can never outrank a list member, so any top-k
     * consumer with k ≤ m reattaches payload columns via a broadcast
     * id-join against the returned table instead of paying a second
     * scoring pass; the reattach scan is column-pruned to the id + payload
     * (the embedding pipeline never runs again).
+    *
+    * A list's order is Spark's `score DESC, tb ASC` ([[rankOrder]]), so the
+    * lists equal `orderBy(col(s).desc, col("tb")).limit(m)`.
     *
     * `tieBreak` must be a numeric (long-castable) UNIQUE id — a duplicated
     * id would collapse to one rank per list.
@@ -196,24 +201,61 @@ object Search {
       k: Int = 60): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val proj = scored
+    val parts = scored
       .select(tieBreak.cast("long").as("tb"),
         denseScore.cast("double").as("ds"),
         keywordScore.cast("double").as("ks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def rankList(score: String): Map[Long, Int] = {
-      proj.orderBy(col(score).desc, col("tb")).limit(m).collect()
-        .zipWithIndex.map { case (r, i) => (r.getLong(0), i + 1) }.toMap
-    }
-    val dr = rankList("ds")
-    val kr = rankList("ks")
-    proj.unpersist(blocking = false)
+      .rdd
+      .mapPartitions { rows =>
+        val (dense, kw) = (new TopM(m), new TopM(m))
+        rows.foreach { r =>
+          require(!r.isNullAt(0), "rrfFuseTopMScores needs a non-null tieBreak id")
+          val tb = r.getLong(0)
+          dense.offer((r.get(1).asInstanceOf[java.lang.Double], tb))
+          kw.offer((r.get(2).asInstanceOf[java.lang.Double], tb))
+        }
+        Iterator((dense.kept, kw.kept))
+      }
+      .collect()
+    def rankList(lists: Seq[Ranked]): Map[Long, Int] =
+      lists.sorted(rankOrder).take(m).zipWithIndex
+        .map { case ((_, tb), i) => (tb, i + 1) }.toMap
+    val dr = rankList(parts.toSeq.flatMap(_._1))
+    val kr = rankList(parts.toSeq.flatMap(_._2))
     (dr.keySet ++ kr.keySet).toSeq.sorted
       .map { tb =>
         (tb, dr.get(tb).map(r => 1.0 / (k + r)).getOrElse(0.0) +
           kr.get(tb).map(r => 1.0 / (k + r)).getOrElse(0.0))
       }
       .toDF("tb", "score")
+  }
+
+  /** A list entry of [[rrfFuseTopMScores]]: (score or null, tb). */
+  private type Ranked = (java.lang.Double, Long)
+
+  /** Spark's `score DESC, tb ASC` over [[Ranked]]: a null score ranks
+    * last (DESC NULLS LAST), NaN above every number, and -0.0 equal to
+    * 0.0 (`SQLOrderingUtil.compareDoubles`). */
+  private val rankOrder: Ordering[Ranked] = (a, b) => {
+    val byScore = (a._1, b._1) match {
+      case (null, null) => 0
+      case (null, _) => 1
+      case (_, null) => -1
+      case (x, y) =>
+        if (x.doubleValue == y.doubleValue) 0
+        else java.lang.Double.compare(y.doubleValue, x.doubleValue)
+    }
+    if (byScore != 0) byScore else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** The `m` best entries offered so far, in a heap whose head is the
+    * worst of them. */
+  private final class TopM(m: Int) {
+    private val heap = new java.util.PriorityQueue[Ranked](rankOrder.reverse)
+    def offer(e: Ranked): Unit =
+      if (heap.size < m) heap.add(e)
+      else if (m > 0 && rankOrder.compare(e, heap.peek) < 0) { heap.poll(); heap.add(e) }
+    def kept: Seq[Ranked] = heap.toArray(Array.empty[Ranked]).toSeq
   }
 
   /** The query's RHP bucket, computed driver-side from the same

@@ -1,10 +1,16 @@
 package graft.model
 
 import graft.SparkSpec
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
-class MemoryModelSpec extends SparkSpec {
+class MemoryModelSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def events = {
     import spark.implicits._
@@ -83,27 +89,64 @@ class MemoryModelSpec extends SparkSpec {
     // sequence numbers must equal the GLOBAL window's, because the scoped
     // pass keeps every row of the touched session
     val hits = env.where(col("memory_id") === "2")
-    val (attached, release) = MemoryModel.attachSequenceManaged(env, hits)
+    val attached = MemoryModel.attachSequence(env, hits)
     val got = attached.select("memory_id", "sequence_order", "preceding_memory_id")
       .collect().map(r => (r.getString(0), r.getInt(1), Option(r.getString(2))))
     assert(got.toSeq == Seq(("2", 2, Some("1"))))
-    release()
   }
 
   test("attachSequence scopes the window to the hit sessions only") {
-    val env = MemoryModel.envelope(events)
-    val hits = env.where(col("session_id") === "20")
-    val (attached, release) = MemoryModel.attachSequenceManaged(env, hits)
-    // the scoped pass must not touch session 10's rows: its physical plan
-    // semi-joins the envelope to the broadcast hit-session list before the
-    // window, so the only windowed rows are session 20's
-    val plan = attached.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      s"expected a broadcast semi-join in:\n$plan")
-    val got = attached.select("memory_id", "sequence_order").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(got == Set(("3", 1)))
-    release()
+    import spark.implicits._
+    // three sessions, hits in two of them; the envelope is read back from
+    // parquet so the session filter can reach the scan
+    val evs = Seq(
+      (1L, Timestamp.valueOf("2024-01-01 00:00:01"), 10L, "click", 1.0, "{}"),
+      (2L, Timestamp.valueOf("2024-01-01 00:00:05"), 10L, "view", 2.0, "{}"),
+      (3L, Timestamp.valueOf("2024-01-01 00:00:03"), 20L, "click", 3.0, "{}"),
+      (4L, Timestamp.valueOf("2024-01-01 00:00:09"), 10L, "purchase", 4.0, "{}"),
+      (5L, Timestamp.valueOf("2024-01-01 00:00:02"), 30L, "view", 5.0, "{}"),
+      (6L, Timestamp.valueOf("2024-01-01 00:00:04"), 30L, "click", 6.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val dir = java.nio.file.Files.createTempDirectory("attach-scope").resolve("env").toString
+    MemoryModel.envelope(evs).write.parquet(dir)
+    val env = spark.read.parquet(dir)
+    val hits = env.where(col("memory_id").isin("3", "6"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val got = try {
+      MemoryModel.attachSequence(env, hits).select("memory_id", "sequence_order")
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSet
+    } finally {
+      GraftTestBridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    assert(got == Set(("3", 1), ("6", 2)))
+    // the window's input is the hit sessions' rows only: the scan carries
+    // the pushed session filter, and the filter above it lets exactly
+    // sessions 20 and 30's three rows through to the window
+    val windowed = plans.asScala.filter(p => find(p)(_.isInstanceOf[WindowExec]).nonEmpty).toSeq
+    assert(windowed.size == 1, s"expected one windowed query, got ${windowed.size}")
+    val plan = windowed.head
+    val pushed = collect(plan) { case s: FileSourceScanExec => s.metadata("PushedFilters") }
+    assert(pushed.exists(_.contains("In(session_id, [20,30])")), s"pushed filters: $pushed")
+    val reaching = collect(plan) {
+      case f: FilterExec if f.condition.references.exists(_.name == "session_id") =>
+        f.metrics("numOutputRows").value
+    }
+    assert(reaching == Seq(3L), s"rows reaching the window: $reaching\n$plan")
+  }
+
+  test("attachSequence refuses a hit set larger than its driver bound") {
+    val many = spark.range(MemoryModel.MaxAttachHits + 1).select(
+      col("id").cast("string").as("memory_id"), lit("s").as("session_id"),
+      lit(Timestamp.valueOf("2024-01-01 00:00:01")).as("timestamp"))
+    val e = intercept[IllegalArgumentException](MemoryModel.attachSequence(many, many))
+    assert(e.getMessage.contains(s"more than ${MemoryModel.MaxAttachHits} hits"))
   }
 
   test("attachSequence breaks timestamp ties like sessionize on UUID ids") {
@@ -122,8 +165,6 @@ class MemoryModelSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("memory_id", "sequence_order", "preceding_memory_id").collect()
         .map(r => (r.getString(0), r.getInt(1), Option(r.getString(2)))).toSet
-    val (attached, release) = MemoryModel.attachSequenceManaged(mem, mem)
-    assert(rows(attached) == rows(MemoryModel.sessionize(mem)))
-    release()
+    assert(rows(MemoryModel.attachSequence(mem, mem)) == rows(MemoryModel.sessionize(mem)))
   }
 }

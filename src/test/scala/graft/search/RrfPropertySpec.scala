@@ -72,4 +72,56 @@ class RrfPropertySpec extends SparkSpec {
         "tb") == boundedRrf(cs, m)
     })
   }
+
+  /** Bounded-list RRF with each list taken by Spark itself:
+    * `orderBy(col(s).desc, col("tb")).limit(m)`. */
+  private def sparkBoundedRrf(df: DataFrame, m: Int, k: Int = 60): Map[Long, Double] = {
+    val proj = df.select(col("id").as("tb"), col("dense").as("ds"), col("kw").as("ks"))
+    def ranks(s: String): Map[Long, Int] =
+      proj.orderBy(col(s).desc, col("tb")).limit(m).collect()
+        .zipWithIndex.map { case (r, i) => r.getLong(0) -> (i + 1) }.toMap
+    val (dr, kr) = (ranks("ds"), ranks("ks"))
+    (dr.keySet ++ kr.keySet).map { tb =>
+      tb -> (dr.get(tb).map(r => 1.0 / (k + r)).getOrElse(0.0) +
+        kr.get(tb).map(r => 1.0 / (k + r)).getOrElse(0.0))
+    }.toMap
+  }
+
+  // NaN ranks first, null last, -0.0 ties with 0.0; few values, many ties
+  private val edgeScore: Gen[Option[Double]] = Gen.oneOf(
+    Some(Double.NaN), None, Some(0.0), Some(-0.0), Some(0.5), Some(-1.0),
+    Some(Double.PositiveInfinity), Some(Double.NegativeInfinity))
+
+  private def edgeFrame(n: Int, parts: Int): Gen[DataFrame] = {
+    import spark.implicits._
+    Gen.listOfN(n, Gen.zip(edgeScore, edgeScore)).map { ss =>
+      ss.zipWithIndex.map { case ((d, w), i) => (i.toLong, d, w) }
+        .toDF("id", "dense", "kw").repartition(parts)
+    }
+  }
+
+  private def onePassEqualsSpark(df: DataFrame, m: Int): Boolean = {
+    val got = Search.rrfFuseTopMScores(df, col("dense"), col("kw"), col("id"), m)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    got == sparkBoundedRrf(df, m)
+  }
+
+  test("rrfFuseTopMScores lists equal Spark's order under NaN, null and ±0.0 scores") {
+    check(Prop.forAllNoShrink(edgeFrame(20, 3)) { df => onePassEqualsSpark(df, 6) })
+  }
+
+  test("rrfFuseTopMScores lists equal Spark's order at m = 1 and m > n") {
+    check(Prop.forAllNoShrink(edgeFrame(12, 2)) { df =>
+      onePassEqualsSpark(df, 1) && onePassEqualsSpark(df, 50)
+    })
+  }
+
+  test("rrfFuseTopMScores lists equal Spark's order on tied scores and more partitions than rows") {
+    import spark.implicits._
+    check(Prop.forAllNoShrink(Gen.listOfN(5, genCand)) { cs0 =>
+      val df = withIds(cs0).map(c => (c.id, c.dense, c.kw)).toDF("id", "dense", "kw")
+        .repartition(16)
+      onePassEqualsSpark(df, 3) && onePassEqualsSpark(df, 5)
+    })
+  }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved A/B of the scratch-root placement (disk-backed /tmp vs
   * tmpfs /dev/shm) in ONE JVM — host drift hits both arms alike, so
   * the per-arm min isolates the I/O-placement effect from ambient
@@ -12,10 +10,7 @@ object AbScratch {
   def main(args: Array[String]): Unit = {
     val rounds = args(0).toInt
     val gates = args.drop(1)
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     def run(name: String): Double = {

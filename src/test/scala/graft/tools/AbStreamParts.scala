@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Interleaved A/B of the SESSION shuffle-partition count seen by the
   * streaming gates that do not pin their own (state stores + foreachBatch
-  * fold parquets inherit it): 32 (today's bench session) vs candidate
+  * fold parquets inherit it): the bench session's own count vs candidate
   * pins, one JVM, min-of-N per arm.
   * `Test/runMain graft.tools.AbStreamParts <rounds> <query...>`. */
 object AbStreamParts {
@@ -12,18 +10,16 @@ object AbStreamParts {
     val rounds = args(0).toInt
     val armsArg = args(1).split(",").toSeq // e.g. "32,8,2"
     val gates = args.drop(2)
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
+    val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
     def run(name: String, parts: String): Double = {
       s.conf.set("spark.sql.shuffle.partitions", parts)
       val t0 = System.nanoTime()
       try graft.SparkEntry.queries(name)(s, d)
         .write.format("noop").mode("overwrite").save()
-      finally s.conf.set("spark.sql.shuffle.partitions", "32")
+      finally s.conf.set("spark.sql.shuffle.partitions", sessionParts)
       (System.nanoTime() - t0) / 1e9
     }
     val arms = armsArg

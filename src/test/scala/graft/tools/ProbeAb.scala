@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Cross-JVM A/B arm for plan_suspect triage (round-9 judge item 4):
   * each invocation is ONE FRESH JVM that times the stable baseline and
   * each named gate twice (noop-materialized, min-of-two printed), so
@@ -11,9 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ProbeAb {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def time(name: String): Double = {

@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-robin re-timing of bench-flagged queries in ONE JVM: per-query
   * minimum over N interleaved reps is host-noise-robust (any stall hits a
   * rep of every query equally). Used for the drift-vs-plan verdict the
   * regression list requires. */
 object ProbeFlagged {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     val names = if (args.nonEmpty) args.toSeq

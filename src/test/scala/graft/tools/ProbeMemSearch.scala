@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.Embedder
 import graft.model.MemoryModel
@@ -13,9 +12,7 @@ import graft.search.Search
   */
 object ProbeMemSearch {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     val dims = 8

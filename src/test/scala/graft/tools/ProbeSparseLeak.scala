@@ -1,15 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Does the sparse gate's internal persist() dedupe across invocations, or
   * leak one postings copy per call? Prints the persistent-RDD census and
   * storage memory after each rep. */
 object ProbeSparseLeak {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     for (rep <- 1 to 4) {

@@ -1,16 +1,13 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level accounting for search_sparse_cosine: wall duration vs summed
   * executor run time per stage, over 3 warm reps — separates "the stages
   * compute more" from "the stages wait more" (scheduling/GC/host stalls). */
 object ProbeSparseStages {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.GateSession()
     s.sparkContext.setLogLevel("ERROR")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, Long, Int)]()
     s.sparkContext.addSparkListener(new SparkListener {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.AtomicLong
 
@@ -22,10 +21,7 @@ object ScaleSoak {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleSoak <sfDir> <gate…>")
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GateSession()
     spark.sparkContext.setLogLevel("ERROR")
     val shufRecs = new AtomicLong(0L)
     val shufBytes = new AtomicLong(0L)
