@@ -20,17 +20,17 @@ private[graft] object GraphGates {
       .groupBy(col("vec_id")).agg(count(lit(1)).as("deg"))
     val core = deg.where(col("deg") >= 3).select(col("vec_id"))
       .localCheckpoint()
-    // core / comp / assigned are NODE-bounded while `pairs` is the
-    // candidate-scale relation; the checkpointed node tables carry no
-    // size statistics, so every attach was a sort-merge join re-shuffling
-    // the pair relation (the r13 graph-iterator finding, Graph.attachFor).
-    // Broadcast the node-bounded side when provably small — core is
-    // already materialized, so the guard count is a local read; the same
-    // conf governs both families (0 disables, which is the A/B toggle).
-    val bcastMax = e.sparkSession.conf
-      .get("graft.graph.broadcastStateMax", "4000000").toLong
+    // core and comp (one row per core node) are bounded by the core
+    // count while `pairs` is the candidate-scale relation; the
+    // checkpointed node tables carry no size statistics, so every attach
+    // was a sort-merge join re-shuffling the pair relation (the r13
+    // graph-iterator finding, Graph.attachFor). Broadcast them when the
+    // core count is under the graph operators' bound — core is already
+    // materialized, so the guard count is a local read. `assigned`
+    // (core ∪ border) can reach every node however small the core is, so
+    // it joins by the planner's own choice.
     val att: DataFrame => DataFrame =
-      if (bcastMax > 0 && core.count() <= bcastMax) broadcast else identity
+      if (core.count() <= operators.Graph.BroadcastStateMax) broadcast else identity
     val corePairs = pairs
       .join(att(core.select(col("vec_id").as("a"))), "a")
       .join(att(core.select(col("vec_id").as("b"))), "b")
@@ -47,7 +47,7 @@ private[graft] object GraphGates {
         lit("core").as("role"), col("component").as("cluster"))
       .unionAll(border.select(col("vec_id"), lit("border").as("role"),
         col("cluster")))
-    e.select(col("vec_id")).join(att(assigned), Seq("vec_id"), "left")
+    e.select(col("vec_id")).join(assigned, Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("role"), lit("noise")).as("role"),
         col("cluster"))
       .orderBy(col("vec_id"))

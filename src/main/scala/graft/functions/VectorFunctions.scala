@@ -103,4 +103,15 @@ object VectorFunctions {
     }
     bits.reduce(_ + _)
   }
+
+  /** Driver-side twin of [[rhpBucket]] for one vector: the same sign test
+    * against the same `signs` ([[hyperplaneSigns]]), each projection summed
+    * left to right. Used by [[graft.search.Search.queryBucket]] (the query
+    * vector) and [[graft.operators.Similarity.ivfAssignAnn]] (centroids).
+    */
+  private[graft] def rhpBucketOf(v: Seq[Double], signs: Seq[Seq[Double]]): Long =
+    signs.zipWithIndex.map { case (s, p) =>
+      val proj = s.zip(v).map { case (a, b) => a * b }.sum
+      if (proj >= 0) 1L << p else 0L
+    }.sum
 }

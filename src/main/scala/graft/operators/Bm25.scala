@@ -99,8 +99,7 @@ object Bm25 {
     * each query term is `size(filter(tokens, _ === t))` over the row's own
     * token array, a term's contribution is rounded to 9 digits and taken
     * to `decimal(28,12)`, and the per-document sum adds them in decimal.
-    * Catalyst pushes the no-query-term predicate below the token
-    * projection, so a kept row is tokenized twice, a dropped one once.
+    * Every row is tokenized once, kept or dropped.
     */
   def score(docs: DataFrame, textCol: String, idCol: String, query: String,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -113,9 +112,12 @@ object Bm25 {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     }.toMap
     // tokens, then per-term tf as real columns: each HOF pass runs once
-    // per row, not once per reference
+    // per row, not once per reference. The tokens come out of a
+    // one-element explode so the no-query-term filter stays above them:
+    // over a plain projection Catalyst pushes the filter below it and
+    // inlines the token expression, tokenizing every kept row twice.
     val tfs = docs
-      .select(col(idCol), toks(col(textCol)).as("toks_"))
+      .select(col(idCol), explode(array(toks(col(textCol)))).as("toks_"))
       .where(arrays_overlap(col("toks_"), typedLit(terms)))
       .select(col(idCol) +: size(col("toks_")).as("dl") +: terms.indices.map(i =>
         size(filter(col("toks_"), _ === lit(terms(i)))).cast("double").as(s"tf${i}_")): _*)

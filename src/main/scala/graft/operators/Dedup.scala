@@ -476,22 +476,10 @@ object Dedup {
       idCol: String, minCosine: Double, planes: Int, seeds: Seq[Int],
       dims: Int): DataFrame = {
     require(planes >= 1 && seeds.nonEmpty && seeds.distinct == seeds && dims > 0)
-    val base = vecs.select(col(idCol), col(vecCol))
-    val tables = base
-      .withColumn("sb", explode(array(seeds.map(sd =>
-        struct(lit(sd).as("seed"),
-          VectorFunctions.rhpBucket(col(vecCol), planes, sd, dims).as("bucket"))): _*)))
-      .select(col("sb.seed").as("seed"), col("sb.bucket").as("bucket"), col(idCol))
-    val l = tables.select(col("seed"), col("bucket"), col(idCol).as("a"))
-    val r = tables.select(col("seed"), col("bucket"), col(idCol).as("b"))
-    val cand = l.join(r, Seq("seed", "bucket"))
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    cand
-      .join(base.select(col(idCol).as("a"), col(vecCol).as("va")), Seq("a"))
-      .join(base.select(col(idCol).as("b"), col(vecCol).as("vb")), Seq("b"))
+    val cand = Similarity.lshPairs(vecs, vecCol, idCol, planes, seeds, dims)
+    Similarity.withVectors(cand, vecs, vecCol, idCol, "a", "b", broadcastVecs = false)
       .withColumn("cosine",
-        round(VectorFunctions.cosine(col("va"), col("vb"), dims), 6))
+        round(VectorFunctions.cosine(col("av"), col("bv"), dims), 6))
       .where(col("cosine") >= minCosine)
       .select(col("a"), col("b"), col("cosine"))
   }

@@ -408,19 +408,20 @@ object Graph {
     * while the edge relation they join is the data-scale side — but both
     * sit behind localCheckpoints with no size statistics, so the planner
     * sort-merge-joins and re-shuffles the edges EVERY round. When the
-    * checkpointed edge relation is provably small enough that any
-    * node-bounded table is broadcast-safe (nodes ≤ 2·edges), attach the
-    * per-round state by broadcast instead (guide §3.1): the edge relation
-    * is then never shuffled by the iteration. Threshold is conf-driven
-    * (`graft.graph.broadcastStateMax`, edges; 0 disables) so production
-    * sizes it and probes can A/B it; identical results either way — only
-    * the join strategy differs. Costs one count() on checkpointed edges
-    * per operator against 2·rounds saved exchanges. */
-  private def attachFor(e: DataFrame): DataFrame => DataFrame = {
-    val max = e.sparkSession.conf
-      .get("graft.graph.broadcastStateMax", "4000000").toLong
-    if (max > 0 && e.count() <= max) broadcast else identity
-  }
+    * checkpointed edge relation holds at most [[BroadcastStateMax]] edges,
+    * any node-bounded table is broadcast-safe (nodes ≤ 2·edges), so the
+    * per-round state is attached by broadcast instead (guide §3.1): the
+    * edge relation is then never shuffled by the iteration. Identical
+    * results either way — only the join strategy differs. Costs one
+    * count() on checkpointed edges per operator against 2·rounds saved
+    * exchanges. */
+  private def attachFor(e: DataFrame): DataFrame => DataFrame =
+    if (e.count() <= BroadcastStateMax) broadcast else identity
+
+  /** The edge count up to which the graph operators broadcast their
+    * node-bounded state (≤ 2 × 4M nodes of a few longs each); the DBSCAN
+    * gates bound their core tables by it too. */
+  private[graft] val BroadcastStateMax = 4000000L
 
   /** Undirected expansion + degree relation, both materialized for the
     * iteration loop (each round reads them once per branch). */

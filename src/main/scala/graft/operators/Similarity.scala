@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Exact top-k neighbors of one query vector. */
+  /** Exact top-k neighbors of one query vector; also the exact rerank of
+    * [[pqAdcRerank]] and [[hammingRerank]] over their shortlisted rows. */
   def bruteForceTopK(vecs: DataFrame, vecCol: String, idCol: String,
       query: Seq[Float], k: Int): DataFrame =
     vecs
@@ -106,25 +107,14 @@ object Similarity {
     val spark = vecs.sparkSession
     import spark.implicits._
     val dims = centroids.head._2.length
-    // same sign derivation and summation order as the engine-side
-    // rhpBucket, so a centroid lands in exactly the bucket a vector
+    // bucketed driver-side with the hyperplanes the engine-side rhpBucket
+    // hashes with, so a centroid lands in exactly the bucket a vector
     // with its coordinates would
     val centRows = for {
       sd <- seeds
       signs = VectorFunctions.hyperplaneSigns(planes, dims, sd)
       (cell, cv) <- centroids
-    } yield {
-      var bucket = 0L
-      var p = 0
-      while (p < planes) {
-        var dot = 0.0
-        var i = 0
-        while (i < dims) { dot += cv(i) * signs(p)(i); i += 1 }
-        if (dot >= 0) bucket |= 1L << p
-        p += 1
-      }
-      (sd, bucket, cell, cv)
-    }
+    } yield (sd, VectorFunctions.rhpBucketOf(cv, signs), cell, cv)
     val cdf = broadcast(centRows.toDF("seed", "bucket", "cell", "cvec"))
     // per-seed base bucket, then the multi-probe expansion: the base
     // bucket plus (at radius 1) every single-plane flip of it
@@ -208,21 +198,35 @@ object Similarity {
     c
   }
 
-  /** One Lloyd mean step over an assigned (cell, vector) relation:
-    * per-(cell, dim) decimal sums (bit-reproducible across partitionings)
-    * reassembled into per-cell mean vectors. Driver collect is bounded by
-    * the centroid count — cells × dims doubles. */
+  /** [[lloydStep]] over an assigned (cell, vector) relation, as the
+    * (cell, sum vector) list [[kmeansRefine]] and [[kmeansRefineAnn]]
+    * iterate on. */
   private def lloydMeans(assigned: DataFrame,
-      vecCol: String): Seq[(Int, Seq[Double])] = {
-    assigned
-      .select(col("cell"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(round(sum(col("x").cast("decimal(28,8)")).cast("double"), 6).as("m"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cell"), transform(col("pm"), p => p.getField("m")).as("cvec"))
-      .collect()
+      vecCol: String): Seq[(Int, Seq[Double])] =
+    lloydStep(assigned, Seq("cell"), vecCol, divideByCount = false)
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
+
+  /** One Lloyd centroid step over an assigned relation: per-(key, dim)
+    * decimal sums of `vecCol` (bit-reproducible across partitionings),
+    * divided by the member count when `divideByCount`, rounded to 6 dp
+    * and reassembled into one vector per key. Rows are the `keys` then
+    * the vector. Driver collect is bounded by the centroid count —
+    * centroids × dims doubles. Used by [[kmeansRefine]] and
+    * [[kmeansRefineAnn]] (key `cell`, sums), [[pqTrain]] (keys
+    * `sub, code`, sums) and [[pqTrainUnitMeans]] (keys `sub, code`,
+    * means). */
+  private def lloydStep(assigned: DataFrame, keys: Seq[String], vecCol: String,
+      divideByCount: Boolean): Array[Row] = {
+    val keyCols = keys.map(col)
+    val total = sum(col("x").cast("decimal(28,8)")).cast("double")
+    assigned
+      .select(keyCols :+ posexplode(col(vecCol)).as(Seq("pos", "x")): _*)
+      .groupBy(keyCols :+ col("pos"): _*)
+      .agg(round(if (divideByCount) total / count(lit(1)) else total, 6).as("m"))
+      .groupBy(keyCols: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+      .select(keyCols :+ transform(col("pm"), p => p.getField("m")).as("cvec"): _*)
+      .collect()
   }
 
   /** Product-quantization codebooks for cosine/MIPS ANN: split the vector
@@ -238,48 +242,9 @@ object Similarity {
       m: Int, codebookSize: Int, dims: Int,
       iters: Int = 1): Seq[(Int, Int, Seq[Double])] = {
     require(m >= 1 && dims % m == 0, s"dims $dims must divide into m=$m subspaces")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val subLen = dims / m
-    // long form (one row per vector × subspace) trains EVERY subspace in
-    // the same jobs: per Lloyd round, one broadcast-assign + one sum
-    // aggregation over ONE scan — not 2×m jobs of the per-subspace loop
-    // (bit-identical results; only the pass structure changes)
-    val subStructs = array((0 until m).map(s =>
-      struct(lit(s).as("sub"), slice(col(vecCol), s * subLen + 1, subLen).as("sv"))): _*)
-    val subs = vecs.select(col(idCol).as("_id"), explode(subStructs).as("e"))
-      .select(col("_id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
-
-    // init: sub-slices of the codebookSize smallest-id vectors (same
-    // deterministic seed as pickCentroids, sliced driver-side)
-    var codebook: Seq[(Int, Int, Seq[Double])] = vecs
-      .orderBy(col(idCol)).limit(codebookSize)
-      .select(col(vecCol)).collect().zipWithIndex.toSeq
-      .flatMap { case (row, code) =>
-        val full = row.getSeq[Float](0).map(_.toDouble)
-        (0 until m).map(s => (s, code, full.slice(s * subLen, (s + 1) * subLen)))
-      }
-
-    for (_ <- 1 to iters) {
-      val cdf = broadcast(codebook.toDF("sub", "code", "cvec"))
-      val assigned = subs.join(cdf, "sub")
-        .withColumn("sim", VectorFunctions.cosine(col("sv"), col("cvec"), subLen))
-        .groupBy(col("_id"), col("sub"))
-        .agg(max(struct(col("sim"), col("code"))).getField("code").as("code"),
-          first(col("sv")).as("sv"))
-      val sums = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(round(sum(col("x").cast("decimal(28,8)")).cast("double"), 6).as("mval"))
-        .groupBy(col("sub"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mval")))).as("pm"))
-        .select(col("sub"), col("code"),
-          transform(col("pm"), p => p.getField("mval")).as("cvec"))
-        .collect()
-      codebook = sums.map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-        .toSeq.sortBy(t => (t._1, t._2))
-    }
-    codebook
+    pqLloyd(vecs.select(col(idCol).as("_id"), col(vecCol).as("_v")),
+      pickCentroids(vecs, vecCol, idCol, codebookSize), m, dims / m, iters,
+      divideByCount = false)
   }
 
   /** Refined-PQ codebooks: like [[pqTrain]] but over the L2-NORMALIZED
@@ -300,32 +265,41 @@ object Similarity {
       m: Int, codebookSize: Int, dims: Int,
       iters: Int = 1): Seq[(Int, Int, Seq[Double])] = {
     require(m >= 1 && dims % m == 0, s"dims $dims must divide into m=$m subspaces")
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val subLen = dims / m
     // norm materialized as a real column FIRST: a captured outer expression
     // inside transform() re-evaluates once per element (HOF pitfall)
     val vn = vecs
       .select(col(idCol).as("_id"), col(vecCol).as("_v"),
         VectorFunctions.l2Norm(col(vecCol), dims).as("_n"))
-      .select(col("_id"),
-        transform(col("_v"), x => x / col("_n")).as("_vn"))
-    val subStructs = array((0 until m).map(s =>
-      struct(lit(s).as("sub"), slice(col("_vn"), s * subLen + 1, subLen).as("sv"))): _*)
-    val subs = vn.select(col("_id"), explode(subStructs).as("e"))
-      .select(col("_id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
-
-    // init: normalized sub-slices of the codebookSize smallest-id vectors
-    var codebook: Seq[(Int, Int, Seq[Double])] = vecs
-      .orderBy(col(idCol)).limit(codebookSize)
-      .select(col(vecCol)).collect().zipWithIndex.toSeq
-      .flatMap { case (row, code) =>
-        val raw = row.getSeq[Float](0).map(_.toDouble)
+      .select(col("_id"), transform(col("_v"), x => x / col("_n")).as("_v"))
+    val init = pickCentroids(vecs, vecCol, idCol, codebookSize).map {
+      case (code, raw) =>
         val nrm = math.sqrt(raw.iterator.map(x => x * x).sum)
-        val full = raw.map(_ / nrm)
-        (0 until m).map(s => (s, code, full.slice(s * subLen, (s + 1) * subLen)))
-      }
+        (code, raw.map(_ / nrm))
+    }
+    pqLloyd(vn, init, m, dims / m, iters, divideByCount = true)
+  }
 
+  /** The PQ training loop of [[pqTrain]] and [[pqTrainUnitMeans]] over
+    * (_id, _v) rows: `_v` and the `init` vectors (one per code) are cut
+    * into `m` contiguous slices of `subLen`, and each Lloyd round assigns
+    * every slice to its nearest same-subspace centroid by cosine (highest
+    * code on ties) and takes [[lloydStep]] per (sub, code).
+    *
+    * Long form (one row per vector × subspace) trains EVERY subspace in
+    * the same jobs: per round one broadcast-assign + one sum aggregation
+    * over ONE scan — not 2×m jobs of a per-subspace loop.
+    */
+  private def pqLloyd(vs: DataFrame, init: Seq[(Int, Seq[Double])], m: Int,
+      subLen: Int, iters: Int, divideByCount: Boolean): Seq[(Int, Int, Seq[Double])] = {
+    val spark = vs.sparkSession
+    import spark.implicits._
+    val subStructs = array((0 until m).map(s =>
+      struct(lit(s).as("sub"), slice(col("_v"), s * subLen + 1, subLen).as("sv"))): _*)
+    val subs = vs.select(col("_id"), explode(subStructs).as("e"))
+      .select(col("_id"), col("e.sub").as("sub"), col("e.sv").as("sv"))
+    var codebook: Seq[(Int, Int, Seq[Double])] = init.flatMap { case (code, full) =>
+      (0 until m).map(s => (s, code, full.slice(s * subLen, (s + 1) * subLen)))
+    }
     for (_ <- 1 to iters) {
       val cdf = broadcast(codebook.toDF("sub", "code", "cvec"))
       val assigned = subs.join(cdf, "sub")
@@ -333,17 +307,8 @@ object Similarity {
         .groupBy(col("_id"), col("sub"))
         .agg(max(struct(col("sim"), col("code"))).getField("code").as("code"),
           first(col("sv")).as("sv"))
-      val sums = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg(round(sum(col("x").cast("decimal(28,8)")).cast("double")
-          / count(lit(1)), 6).as("mval"))
-        .groupBy(col("sub"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mval")))).as("pm"))
-        .select(col("sub"), col("code"),
-          transform(col("pm"), p => p.getField("mval")).as("cvec"))
-        .collect()
-      codebook = sums.map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+      codebook = lloydStep(assigned, Seq("sub", "code"), "sv", divideByCount)
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
         .toSeq.sortBy(t => (t._1, t._2))
     }
     codebook
@@ -452,12 +417,7 @@ object Similarity {
       .orderBy(col("adc").desc, col(idCol))
       .limit(shortlist)
       .select(col(idCol))
-    vecs.join(broadcast(short), idCol)
-      .withColumn("score", round(
-        VectorFunctions.cosine(col(vecCol), typedLit(query), query.length), 6))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("score"))
+    bruteForceTopK(vecs.join(broadcast(short), idCol), vecCol, idCol, query, k)
   }
 
   /** Chunk-pooled document embedding — the long-document pipeline shape:
@@ -769,12 +729,7 @@ object Similarity {
       .orderBy(col("ham").asc, col(idCol))
       .limit(shortlist)
       .select(col(idCol))
-    vecs.join(broadcast(short), idCol)
-      .withColumn("score", round(
-        VectorFunctions.cosine(col(vecCol), typedLit(query), query.length), 6))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("score"))
+    bruteForceTopK(vecs.join(broadcast(short), idCol), vecCol, idCol, query, k)
   }
 
   /** IVF probe: assign the query to its `nprobe` nearest cells, scan only
@@ -969,8 +924,8 @@ object Similarity {
     * candidates (both directions of every candidate pair compete for
     * both endpoints' m slots).
     *
-    * Physical shape at 100 TB: per-table self-joins shuffled on the
-    * bucket key, a distinct on the candidate pair, two broadcast joins
+    * Physical shape at 100 TB: one [[lshPairs]] self-join shuffled on
+    * (seed, bucket), a distinct on the candidate pair, two broadcast joins
     * to fetch vectors, one window shuffled on src. The graph is the
     * serving artifact — built once, stored partitioned by src.
     */
@@ -980,20 +935,10 @@ object Similarity {
     require(m >= 1 && seeds.nonEmpty)
     val v = vecs.select(col(idCol).as("id"), col(vecCol).as("v_"))
       .localCheckpoint()
-    val pairs = seeds.map { sd =>
-      val b = v.select(col("id"),
-        VectorFunctions.rhpBucket(col("v_"), planes, sd, dims).as("bucket"))
-      b.select(col("id").as("a"), col("bucket"))
-        .join(b.select(col("id").as("b"), col("bucket")), "bucket")
-        .where(col("a") < col("b"))
-        .select(col("a"), col("b"))
-    }.reduce(_ unionAll _).distinct()
-    val scored = pairs
-      .join(broadcast(v.select(col("id").as("a"), col("v_").as("va"))), "a")
-      .join(broadcast(v.select(col("id").as("b"), col("v_").as("vb"))), "b")
-      .withColumn("s", round(
-        VectorFunctions.cosine(col("va"), col("vb"), dims), 6))
-      .select(col("a"), col("b"), col("s"))
+    val scored = withVectors(lshPairs(v, "v_", "id", planes, seeds, dims),
+        v, "v_", "id", "a", "b", broadcastVecs = true)
+      .select(col("a"), col("b"),
+        round(VectorFunctions.cosine(col("av"), col("bv"), dims), 6).as("s"))
     val sym = scored
       .select(col("a").as("src"), col("b").as("dst"), col("s"))
       .unionAll(scored.select(col("b").as("src"), col("a").as("dst"),
@@ -1146,26 +1091,7 @@ object Similarity {
       k: Int, minCosine: Double, planes: Int, seeds: Seq[Int],
       dims: Int): DataFrame = {
     require(k >= 1 && planes >= 1 && seeds.nonEmpty && dims > 0)
-    val base = vecs.select(col(idCol), col(vecCol))
-    val tables = base
-      .withColumn("sb", explode(array(seeds.map(sd =>
-        struct(lit(sd).as("seed"),
-          VectorFunctions.rhpBucket(col(vecCol), planes, sd, dims)
-            .as("bucket"))): _*)))
-      .select(col("sb.seed").as("seed"), col("sb.bucket").as("bucket"),
-        col(idCol))
-    val cand = tables.select(col("seed"), col("bucket"), col(idCol).as("q"))
-      .join(tables.select(col("seed"), col("bucket"), col(idCol).as("b")),
-        Seq("seed", "bucket"))
-      .where(col("q") =!= col("b"))
-      .select(col("q"), col("b")).distinct()
-    // vector-store attach onto the candidate-scale relation: broadcast
-    // the n-row store when provably small (the knnGraphDescent guard)
-    val att: DataFrame => DataFrame =
-      if (vecs.count() <= 500000L) broadcast else identity
-    mutualTopK(cand
-      .join(att(base.select(col(idCol).as("q"), col(vecCol).as("qv"))), Seq("q"))
-      .join(att(base.select(col(idCol).as("b"), col(vecCol).as("bv"))), Seq("b")),
+    mutualTopK(bucketedCandidates(vecs, vecCol, idCol, planes, seeds, dims),
       k, minCosine, dims)
   }
 
@@ -1196,26 +1122,21 @@ object Similarity {
       k: Int, minCosine: Double, planes: Int, seeds: Seq[Int],
       dims: Int): DataFrame = {
     require(k >= 1 && planes >= 1 && seeds.nonEmpty && dims > 0)
-    val base = vecs.select(col(idCol), col(vecCol))
-    val tables = base
-      .withColumn("sb", explode(array(seeds.map(sd =>
-        struct(lit(sd).as("seed"),
-          VectorFunctions.rhpBucket(col(vecCol), planes, sd, dims)
-            .as("bucket"))): _*)))
-      .select(col("sb.seed").as("seed"), col("sb.bucket").as("bucket"),
-        col(idCol))
-    val cand = tables.select(col("seed"), col("bucket"), col(idCol).as("q"))
-      .join(tables.select(col("seed"), col("bucket"), col(idCol).as("b")),
-        Seq("seed", "bucket"))
-      .where(col("q") =!= col("b"))
-      .select(col("q"), col("b")).distinct()
-    // same vector-store broadcast attach as mutualKnnPairsBucketed
-    val att: DataFrame => DataFrame =
-      if (vecs.count() <= 500000L) broadcast else identity
-    directedTopK(cand
-      .join(att(base.select(col(idCol).as("q"), col(vecCol).as("qv"))), Seq("q"))
-      .join(att(base.select(col(idCol).as("b"), col(vecCol).as("bv"))), Seq("b")),
+    directedTopK(bucketedCandidates(vecs, vecCol, idCol, planes, seeds, dims),
       k, minCosine, dims)
+  }
+
+  /** Directed candidate rows (q, b, qv, bv) of the bucketed kNN forms
+    * [[mutualKnnPairsBucketed]] and [[knnGraphBucketed]]: both directions
+    * of every [[lshPairs]] pair — exactly the q ≠ b co-bucket pairs — with
+    * the vectors attached, the store broadcast when [[fitsBroadcast]]. */
+  private def bucketedCandidates(vecs: DataFrame, vecCol: String,
+      idCol: String, planes: Int, seeds: Seq[Int], dims: Int): DataFrame = {
+    val pairs = lshPairs(vecs, vecCol, idCol, planes, seeds, dims)
+    withVectors(pairs.select(col("a").as("q"), col("b"))
+        .unionAll(pairs.select(col("b").as("q"), col("a").as("b"))),
+      vecs, vecCol, idCol, "q", "b",
+      broadcastVecs = fitsBroadcast(vecs.count(), vecRowBytes(dims)))
   }
 
   /** NN-Descent refinement (Dong, Moses & Li, WWW'11 "Efficient k-nearest
@@ -1241,28 +1162,30 @@ object Similarity {
       graph0: DataFrame, k: Int, minCosine: Double, rounds: Int,
       dims: Int): DataFrame = {
     require(k >= 1 && rounds >= 0 && dims > 0)
-    val base = vecs.select(col(idCol), col(vecCol))
     // The candidate relation is n·(2k)² rows per round; the tables it
-    // joins — the n-row vector store (score attach) and the 2kn-row
-    // undirected edge list (two-hop closure) — are the provably-smaller
-    // sides, but they sit behind localCheckpoints with no size
-    // statistics, so the planner sort-merge-joined and re-shuffled the
-    // candidates four times per round. Broadcast the small sides instead
-    // (guide §3.1, the r13 hits/nsw playbook): candidates are then never
-    // shuffled for the attach; only the final per-q window moves them
+    // joins — the n-row vector store (score attach) and the ≤ 2kn-row
+    // undirected edge list (two-hop closure; graph0 holds ≤ k rows per q
+    // as every kNN form here does) — are the provably-smaller sides, but
+    // they sit behind localCheckpoints with no size statistics, so the
+    // planner sort-merge-joined and re-shuffled the candidates four times
+    // per round. Broadcast each small side instead (guide §3.1, the r13
+    // hits/nsw playbook): candidates are then never shuffled for the
+    // attach; only the final per-q window moves them
     // (OPTIMIZATION_r13.md §10: descent rounds 1.36 -> 0.96 s at sf0.1,
-    // results row-identical). Guarded: one count() job against four
-    // saved exchanges per round; past ~500k vectors (store ≈ 130 MB at
-    // dims 64, edge list ≈ 2k·n rows) the default strategy returns.
-    val att: DataFrame => DataFrame =
-      if (vecs.count() <= 500000L) broadcast else identity
+    // results row-identical). Each side is sized on its own rows by
+    // [[fitsBroadcast]] from one count() job, against four saved
+    // exchanges per round.
+    val n = vecs.count()
+    val vecsFit = fitsBroadcast(n, vecRowBytes(dims))
+    val attEdges: DataFrame => DataFrame =
+      if (fitsBroadcast(2L * k * n, EdgeRowBytes)) broadcast else identity
     var g = graph0.select(col("q"), col("b"), col("s")).localCheckpoint()
     for (_ <- 1 to rounds) {
       val edges = g.select(col("q"), col("b"))
       val nbr = edges.unionAll(
         edges.select(col("b").as("q"), col("q").as("b")))
       val twoHop = nbr.select(col("q"), col("b").as("m"))
-        .join(att(nbr.select(col("q").as("m"), col("b"))), Seq("m"))
+        .join(attEdges(nbr.select(col("q").as("m"), col("b"))), Seq("m"))
         .select(col("q"), col("b"))
       // candidates = UNDIRECTED 1-hop ∪ 2-hop: proposing the reverse
       // direct edge matters — without it a vector whose nearest neighbor
@@ -1270,11 +1193,72 @@ object Similarity {
       // next re-rank instead of adopting it
       val cand = nbr.unionAll(twoHop)
         .where(col("q") =!= col("b")).distinct()
-      g = directedTopK(cand
-        .join(att(base.select(col(idCol).as("q"), col(vecCol).as("qv"))), Seq("q"))
-        .join(att(base.select(col(idCol).as("b"), col(vecCol).as("bv"))), Seq("b")),
+      g = directedTopK(
+        withVectors(cand, vecs, vecCol, idCol, "q", "b", broadcastVecs = vecsFit),
         k, minCosine, dims).localCheckpoint()
     }
     g
   }
+
+  /** Undirected RHP-LSH candidate pairs (a, b), a < b: the id pairs that
+    * share a bucket under at least one seed's hyperplanes. One scan
+    * computes every per-seed bucket (explode over a literal
+    * (seed, bucket) struct array — |seeds| small), the self-join shuffles
+    * on (seed, bucket), and `distinct` folds a pair found by several
+    * tables into one row — never all-pairs, never a driver collect.
+    * Used by [[graft.operators.Dedup.embeddingNearDupPairsMultiTable]],
+    * [[nswGraph]], and mirrored to both directions by
+    * [[mutualKnnPairsBucketed]] and [[knnGraphBucketed]].
+    */
+  private[operators] def lshPairs(vecs: DataFrame, vecCol: String,
+      idCol: String, planes: Int, seeds: Seq[Int], dims: Int): DataFrame = {
+    val tables = vecs
+      .select(col(idCol), explode(array(seeds.map(sd =>
+        struct(lit(sd).as("seed"),
+          VectorFunctions.rhpBucket(col(vecCol), planes, sd, dims).as("bucket"))): _*))
+        .as("sb"))
+      .select(col("sb.seed").as("seed"), col("sb.bucket").as("bucket"), col(idCol))
+    tables.select(col("seed"), col("bucket"), col(idCol).as("a"))
+      .join(tables.select(col("seed"), col("bucket"), col(idCol).as("b")),
+        Seq("seed", "bucket"))
+      .where(col("a") < col("b"))
+      .select(col("a"), col("b")).distinct()
+  }
+
+  /** Attaches both endpoints' vectors to an id-pair relation: `pairs`
+    * holds id columns `l` and `r`, and each gains its vector from `vecs`
+    * as `l + "v"` / `r + "v"` through an id equi-join, the vector side
+    * broadcast when `broadcastVecs` (decided by [[fitsBroadcast]] where
+    * the store's row count is known). Used by
+    * [[graft.operators.Dedup.embeddingNearDupPairsMultiTable]] (never
+    * broadcast: no count is taken), [[nswGraph]] (always: its store is
+    * checkpointed for the build), and [[mutualKnnPairsBucketed]],
+    * [[knnGraphBucketed]] and [[knnGraphDescent]] (sized).
+    */
+  private[operators] def withVectors(pairs: DataFrame, vecs: DataFrame,
+      vecCol: String, idCol: String, l: String, r: String,
+      broadcastVecs: Boolean): DataFrame = {
+    def side(id: String): DataFrame = {
+      val v = vecs.select(col(idCol).as(id), col(vecCol).as(id + "v"))
+      if (broadcastVecs) broadcast(v) else v
+    }
+    pairs.join(side(l), Seq(l)).join(side(r), Seq(r))
+  }
+
+  /** Bytes of one vector-store row (a long id and `dims` floats) and of
+    * one (q, b) edge row, for [[fitsBroadcast]]. */
+  private[operators] def vecRowBytes(dims: Int): Long = 8L + 4L * dims
+  private[operators] val EdgeRowBytes = 16L
+
+  /** The broadcast budget of the vector-neighbour operators: a 500k-vector
+    * store at 64 dims (≈ 132 MB). */
+  private val BroadcastBytes = 500000L * vecRowBytes(64)
+
+  /** Whether a relation of `rows` rows of `rowBytes` bytes each may be
+    * broadcast: the one rule behind every sized vector or edge attach
+    * here, applied to the side that is broadcast — the vector store of
+    * [[mutualKnnPairsBucketed]], [[knnGraphBucketed]] and
+    * [[knnGraphDescent]], and the descent's edge list. */
+  private[operators] def fitsBroadcast(rows: Long, rowBytes: Long): Boolean =
+    rows <= BroadcastBytes / rowBytes
 }

@@ -263,13 +263,9 @@ object Search {
     * [[lshSearch]] and for partition-pruned reads of a store written
     * `partitionBy("bucket")`.
     */
-  def queryBucket(queryVec: Seq[Float], planes: Int, seed: Int): Long = {
-    val signs = VectorFunctions.hyperplaneSigns(planes, queryVec.length, seed)
-    signs.zipWithIndex.map { case (s, p) =>
-      val proj = s.zip(queryVec).map { case (a, b) => a * b.toDouble }.sum
-      if (proj >= 0) 1L << p else 0L
-    }.sum
-  }
+  def queryBucket(queryVec: Seq[Float], planes: Int, seed: Int): Long =
+    VectorFunctions.rhpBucketOf(queryVec.map(_.toDouble),
+      VectorFunctions.hyperplaneSigns(planes, queryVec.length, seed))
 
   /** ANN via random-hyperplane LSH: prune to the query's bucket, then exact
     * cosine within it. At 100 TB the store is written partitioned by

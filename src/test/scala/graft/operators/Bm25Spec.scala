@@ -147,4 +147,15 @@ class Bm25Spec extends SparkSpec {
     val got = assertMatchesReference(docs.repartition(3), query)
     assert(got.size > 150)
   }
+
+  test("BM25 score tokenizes each row once in its optimized plan") {
+    val path = java.nio.file.Files.createTempDirectory("bm25plan").resolve("docs").toString
+    corpus(Some("spark join"), Some("window scan")).write.parquet(path)
+    val plan = Bm25.score(spark.read.parquet(path), "text", "doc_id", "spark join")
+      .queryExecution.optimizedPlan
+    val splits = plan.collect { case p => p.expressions.map(_.collect {
+      case s: org.apache.spark.sql.catalyst.expressions.StringSplit => s
+    }.size).sum }.sum
+    assert(splits == 1, plan.treeString)
+  }
 }
