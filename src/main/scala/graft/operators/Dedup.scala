@@ -168,6 +168,20 @@ object Dedup {
       .distinct()
   }
 
+  /** (id, n_sh, shk): one row per document and distinct word k-shingle,
+    * the shingle hashed to 60 bits, with the document's distinct-shingle
+    * count — the shingle-set relation the overlap joins below share. */
+  private def shingleHashes(docs: DataFrame, textCol: String, idCol: String,
+      shingleK: Int): DataFrame =
+    docs
+      .withColumn("toks_", TextFunctions.tokens(col(textCol)))
+      .select(col(idCol).as("id"),
+        array_distinct(TextFunctions.shinglesFromTokens(col("toks_"), shingleK))
+          .as("shingles"))
+      .withColumn("n_sh", size(col("shingles")))
+      .select(col("id"), col("n_sh"), explode(col("shingles")).as("shingle"))
+      .select(col("id"), col("n_sh"), HashFunctions.hash64(col("shingle")).as("shk"))
+
   /** Exact n-gram Jaccard similarity for candidate pairs: explode distinct
     * shingles, self-join on shingle (shuffle on shingle hash — uniform),
     * |A∩B| from the join, |A∪B| = |A|+|B|−|A∩B|. `minJaccard` prunes the
@@ -188,18 +202,11 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, minJaccard: Double = 0.5,
       maxDf: Long = Long.MaxValue): DataFrame = {
-    val sh = docs
-      .withColumn("toks_", TextFunctions.tokens(col(textCol)))
-      .select(col(idCol).as("id"),
-        array_distinct(TextFunctions.shinglesFromTokens(col("toks_"), shingleK))
-          .as("shingles"))
-      .withColumn("n_sh", size(col("shingles")))
     // join on the 60-bit shingle hash, not the string: ~3× smaller shuffle
     // and cheap comparisons; a hash collision creates the same phantom
     // match on any engine computing the same hash, so results stay
     // oracle-comparable
-    val exAll = sh.select(col("id"), col("n_sh"), explode(col("shingles")).as("shingle"))
-      .select(col("id"), col("n_sh"), HashFunctions.hash64(col("shingle")).as("shk"))
+    val exAll = shingleHashes(docs, textCol, idCol, shingleK)
     val ex =
       if (maxDf == Long.MaxValue) exAll
       else {
@@ -240,15 +247,7 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, minContainment: Double = 0.8): DataFrame = {
-    val sh = docs
-      .withColumn("toks_", TextFunctions.tokens(col(textCol)))
-      .select(col(idCol).as("id"),
-        array_distinct(TextFunctions.shinglesFromTokens(col("toks_"), shingleK))
-          .as("shingles"))
-      .withColumn("n_sh", size(col("shingles")))
-    val ex = sh
-      .select(col("id"), col("n_sh"), explode(col("shingles")).as("shingle"))
-      .select(col("id"), col("n_sh"), HashFunctions.hash64(col("shingle")).as("shk"))
+    val ex = shingleHashes(docs, textCol, idCol, shingleK)
     val inter = ex.select(col("shk"), col("id").as("a"), col("n_sh").as("na"))
       .join(ex.select(col("shk"), col("id").as("b"), col("n_sh").as("nb")), "shk")
       .where(col("a") < col("b"))
@@ -288,14 +287,7 @@ object Dedup {
     val agree = (0 until numHashes)
       .map(i => when(col(s"ah$i") === col(s"bh$i"), 1).otherwise(0))
       .reduce(_ + _)
-    val sh = docs
-      .withColumn("toks_", TextFunctions.tokens(col(textCol)))
-      .select(col(idCol).as("id"),
-        array_distinct(TextFunctions.shinglesFromTokens(col("toks_"), shingleK))
-          .as("shingles"))
-      .withColumn("n_sh", size(col("shingles")))
-      .select(col("id"), col("n_sh"), explode(col("shingles")).as("shingle"))
-      .select(col("id"), col("n_sh"), HashFunctions.hash64(col("shingle")).as("shk"))
+    val sh = shingleHashes(docs, textCol, idCol, shingleK)
     val inter = sh.select(col("shk"), col("id").as("a"))
       .join(sh.select(col("shk"), col("id").as("b")), "shk")
       .where(col("a") < col("b"))
@@ -436,12 +428,10 @@ object Dedup {
         TextFunctions.shinglesFromTokens(col("toks_"), k))).as("gram"))
       .select(HashFunctions.hash64(col("gram")).as("gh"))
       .distinct()
-      .persist() // two actions below (count + bloom build) — one pipeline run
-    val bloom =
-      try {
-        val expected = math.max(1L, benchGrams.count())
-        benchGrams.stat.bloomFilter("gh", expected, fpp)
-      } finally benchGrams.unpersist() // bounded lifetime, no session leak
+    // two actions (count + bloom build) over one pipeline run
+    val bloom = readOnce(benchGrams) {
+      benchGrams.stat.bloomFilter("gh", math.max(1L, benchGrams.count()), fpp)
+    }
     val bc = docs.sparkSession.sparkContext.broadcast(bloom)
     val survivors = docs
       .select(col(idCol), TextFunctions.tokens(col(textCol)).as("toks_"))

@@ -25,19 +25,15 @@ object Graph {
     * normalized away). Output: (triangles, wedges, clustering) where
     * clustering = 3·triangles / wedges (NULL on a wedge-free graph).
     */
-  def triangleStats(edges: DataFrame): DataFrame =
-    triangleStatsManaged(edges)._1
-
-  /** [[triangleStats]] plus a release handle for the two internal cache
-    * entries (normalized edges, oriented edges) — the
-    * cosinePairsManaged discipline for graph sweep drivers. */
-  def triangleStatsManaged(edges: DataFrame): (DataFrame, () => Unit) = {
+  def triangleStats(edges: DataFrame): DataFrame = {
+    // e and ed are not materialized: the degrees and every join leg read
+    // e's one distinct exchange, which Spark reuses, and ed is a join
+    // over reused stages
     val e = edges
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-      .persist() // degrees + the three join legs read it
     val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     // orient each edge (u → w) from the (degree, id)-smaller endpoint —
@@ -53,7 +49,6 @@ object Graph {
           .otherwise(struct(col("b").as("id"), col("db_").as("d"))).as("u"),
         when(col("fwd_"), struct(col("b").as("id"), col("db_").as("d")))
           .otherwise(struct(col("a").as("id"), col("da_").as("d"))).as("w"))
-      .persist() // two wedge legs + the closing-edge leg
     // wedges at u: unordered out-neighbor pairs, ordered by (d, id) so the
     // closing edge's orientation is known to be x → y
     val wedges = ed.select(col("u"), col("w").as("x"))
@@ -71,8 +66,7 @@ object Graph {
     tri.crossJoin(wedgeCount)
       .select(col("triangles"), col("wedges"),
         when(col("wedges") > 0,
-          lit(3.0) * col("triangles") / col("wedges")).as("clustering")) ->
-      (() => { ed.unpersist(false); e.unpersist(false); () })
+          lit(3.0) * col("triangles") / col("wedges")).as("clustering"))
   }
 
   /** Link prediction by neighborhood overlap: for every NON-adjacent
@@ -104,20 +98,14 @@ object Graph {
     * which is precisely the mass that makes the uncapped join explode.
     */
   def linkPredict(edges: DataFrame, minCommon: Long = 1L,
-      hubMax: Long = Long.MaxValue): DataFrame =
-    linkPredictManaged(edges, minCommon, hubMax)._1
-
-  /** [[linkPredict]] plus a release handle for the internal normalized-
-    * edge cache entry. */
-  def linkPredictManaged(edges: DataFrame, minCommon: Long = 1L,
-      hubMax: Long = Long.MaxValue): (DataFrame, () => Unit) = {
+      hubMax: Long = Long.MaxValue): DataFrame = {
     require(hubMax >= 1L, s"hubMax must be >= 1, got $hubMax")
+    // wedge legs, anti join and degree census share e's distinct exchange
     val e = edges
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-      .persist() // wedge legs + anti join + degree census
     val adj = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
     val deg = adj.groupBy(col("a").as("v")).agg(count(lit(1)).as("d"))
     // wedge centers: every vertex when uncapped; deg-filtered otherwise.
@@ -141,7 +129,7 @@ object Graph {
       .join(deg.select(col("v").as("b"), col("d").as("db_")), "b")
       .select(col("a"), col("b"), col("cn"),
         (col("cn").cast("double") / (col("da_") + col("db_") - col("cn")))
-          .as("score")) -> (() => { e.unpersist(false); () })
+          .as("score"))
   }
 
   /** Statistics-driven hub cap from the (normalized, undirected) edge
@@ -274,7 +262,7 @@ object Graph {
     * triangle-free, so the truss drops it entirely).
     *
     * Each round: one degree-ordered ORIENTATION of the surviving edges
-    * (the [[triangleStatsManaged]] discipline) + a wedge self-join from
+    * (the [[triangleStats]] discipline) + a wedge self-join from
     * each triangle's (degree, id)-smallest corner + the closing-edge
     * semi-join, then each triangle credits its three undirected edges.
     * Orientation bounds the wedge fan-out at Σ outdeg² = O(E^1.5) on

@@ -30,10 +30,56 @@ object MarketBasket {
   /** Frequent item pairs (a < b) with co-occurrence count w >= minSupport
     * and exact-ratio metrics. Output:
     * (a, b, w, support, confidence, lift), one row per surviving pair.
+    * Lazy: building the plan runs no Spark job.
     */
   def frequentPairs(df: DataFrame, basketCol: String, itemCol: String,
-      minSupport: Long, basketMax: Long = Long.MaxValue): DataFrame =
-    frequentPairsManaged(df, basketCol, itemCol, minSupport, basketMax)._1
+      minSupport: Long, basketMax: Long = Long.MaxValue): DataFrame = {
+    // null basket/item keys are dropped (a null basket can form no pairs
+    // in the equi-join anyway, and counting it in the support denominator
+    // would be a phantom basket — inner-join semantics, as in
+    // Sampling.temperatureSample's null-group rule)
+    val bi0 = df.select(col(basketCol).as("bk"), col(itemCol).as("it"))
+      .where(col("bk").isNotNull && col("it").isNotNull)
+      .distinct()
+    // read by the pair join (twice), the item counts and n; not
+    // materialized: the readers share the one distinct exchange, which
+    // Spark reuses. Where a reader needs only the distinct keys (n, and
+    // the item set once a caller drops the counts) Spark elides the
+    // distinct and re-reads just those input columns — cheaper than
+    // building bi twice, and no cache entry outlives the call
+    val bi =
+      if (basketMax == Long.MaxValue) bi0
+      else bi0
+        .withColumn("bs_", count(lit(1))
+          .over(org.apache.spark.sql.expressions.Window.partitionBy(col("bk"))))
+        .where(col("bs_") <= basketMax)
+        .drop("bs_")
+    // basket total stays a LAZY one-row aggregate joined in by broadcast
+    // (the oracle's CROSS JOIN n shape) — an eager count() here would run
+    // a Spark job every time a caller merely CONSTRUCTS the plan
+    val nB = bi.agg(count_distinct(col("bk")).as("nb_"))
+    val itemCnt = bi.groupBy(col("it")).agg(count(lit(1)).as("c"))
+    val pairs = bi.select(col("bk"), col("it").as("a"))
+      .join(bi.select(col("bk"), col("it").as("b")), "bk")
+      .where(col("a") < col("b"))
+      .groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("w"))
+      .where(col("w") >= minSupport)
+    pairs
+      .join(broadcast(itemCnt.select(col("it").as("a"), col("c").as("ca_"))), "a")
+      .join(broadcast(itemCnt.select(col("it").as("b"), col("c").as("cb_"))), "b")
+      .crossJoin(broadcast(nB))
+      .select(col("a"), col("b"), col("w"),
+        (col("w").cast("double") / col("nb_")).as("support"),
+        (col("w").cast("double") / col("ca_")).as("confidence"),
+        // ca_·cb_ multiplied in DOUBLE, not BIGINT: two item counts can
+        // each exceed 3e9 at 100 TB and Spark wraps 64-bit overflow
+        // silently (a SQL engine would error) — the double product is
+        // exact below 2^53 and merely rounds above, never corrupts
+        ((col("w").cast("double") * col("nb_")) /
+          (col("ca_").cast("double") * col("cb_").cast("double")))
+          .as("lift"))
+  }
 
   /** [[frequentPairs]] with the support threshold as a FRACTION of
     * baskets — the scale-robust form. An absolute minSupport is a
@@ -76,22 +122,15 @@ object MarketBasket {
     * Physical shape: identical blocking discipline to [[frequentPairs]]
     * — pairs meet only inside a basket via the basket-key equi-join,
     * `basketMax` caps mega-basket fan-out, threshold prunes before the
-    * metric joins, item counts broadcast.
+    * metric joins, item counts broadcast. Eager, unlike [[frequentPairs]]:
+    * the threshold is a driver scalar from the basket count, so the call
+    * checkpoints the (basket, item, pos) table, counts it, and the
+    * returned plan reads the checkpoint — one pass over the input, and
+    * the blocks are freed with the plan.
     */
   def sequentialPairs(df: DataFrame, basketCol: String, itemCol: String,
       orderCol: String, minSupportFrac: Double,
-      basketMax: Long = Long.MaxValue): DataFrame =
-    sequentialPairsManaged(df, basketCol, itemCol, orderCol,
-      minSupportFrac, basketMax)._1
-
-  /** [[sequentialPairs]] plus a release handle for the internal
-    * (basket, item, pos) cache entry — the cosinePairsManaged discipline
-    * for sweep drivers mining many basket tables in one session (the
-    * unmanaged form otherwise accumulates one cache entry per table for
-    * the session's life). */
-  def sequentialPairsManaged(df: DataFrame, basketCol: String,
-      itemCol: String, orderCol: String, minSupportFrac: Double,
-      basketMax: Long = Long.MaxValue): (DataFrame, CacheHandle) = {
+      basketMax: Long = Long.MaxValue): DataFrame = {
     require(minSupportFrac > 0.0 && minSupportFrac <= 1.0)
     val bi0 = df
       .select(col(basketCol).as("bk"), col(itemCol).as("it"),
@@ -106,7 +145,7 @@ object MarketBasket {
           .over(org.apache.spark.sql.expressions.Window.partitionBy(col("bk"))))
         .where(col("bs_") <= basketMax)
         .drop("bs_")
-      ).persist() // read by the basket count, pair join (twice), item counts
+      ).localCheckpoint() // the eager basket count and the query both read it
     val nb = bi.select(col("bk")).distinct().count()
     val thr = math.max(2L, math.ceil(minSupportFrac * nb).toLong)
     val itemCnt = bi.groupBy(col("it")).agg(count(lit(1)).as("c"))
@@ -121,54 +160,6 @@ object MarketBasket {
         col("c").as("ca_"))), "a")
       .select(col("a"), col("b"), col("w"),
         (col("w").cast("double") / lit(nb)).as("support"),
-        (col("w").cast("double") / col("ca_")).as("confidence")) ->
-      new CacheHandle(bi)
-  }
-
-  /** [[frequentPairs]] plus a release handle for the internal
-    * (basket, item) cache entry — the cosinePairsManaged discipline for
-    * sweep drivers mining many basket tables in one session. */
-  def frequentPairsManaged(df: DataFrame, basketCol: String, itemCol: String,
-      minSupport: Long, basketMax: Long = Long.MaxValue): (DataFrame, CacheHandle) = {
-    // null basket/item keys are dropped (a null basket can form no pairs
-    // in the equi-join anyway, and counting it in the support denominator
-    // would be a phantom basket — inner-join semantics, as in
-    // Sampling.temperatureSample's null-group rule)
-    val bi0 = df.select(col(basketCol).as("bk"), col(itemCol).as("it"))
-      .where(col("bk").isNotNull && col("it").isNotNull)
-      .distinct()
-    val bi = (
-      if (basketMax == Long.MaxValue) bi0
-      else bi0
-        .withColumn("bs_", count(lit(1))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy(col("bk"))))
-        .where(col("bs_") <= basketMax)
-        .drop("bs_")
-      ).persist() // read by the pair join (twice), item counts, and n
-    // basket total stays a LAZY one-row aggregate joined in by broadcast
-    // (the oracle's CROSS JOIN n shape) — an eager count() here would run
-    // a Spark job every time a caller merely CONSTRUCTS the plan
-    val nB = bi.agg(count_distinct(col("bk")).as("nb_"))
-    val itemCnt = bi.groupBy(col("it")).agg(count(lit(1)).as("c"))
-    val pairs = bi.select(col("bk"), col("it").as("a"))
-      .join(bi.select(col("bk"), col("it").as("b")), "bk")
-      .where(col("a") < col("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("w"))
-      .where(col("w") >= minSupport)
-    pairs
-      .join(broadcast(itemCnt.select(col("it").as("a"), col("c").as("ca_"))), "a")
-      .join(broadcast(itemCnt.select(col("it").as("b"), col("c").as("cb_"))), "b")
-      .crossJoin(broadcast(nB))
-      .select(col("a"), col("b"), col("w"),
-        (col("w").cast("double") / col("nb_")).as("support"),
-        (col("w").cast("double") / col("ca_")).as("confidence"),
-        // ca_·cb_ multiplied in DOUBLE, not BIGINT: two item counts can
-        // each exceed 3e9 at 100 TB and Spark wraps 64-bit overflow
-        // silently (a SQL engine would error) — the double product is
-        // exact below 2^53 and merely rounds above, never corrupts
-        ((col("w").cast("double") * col("nb_")) /
-          (col("ca_").cast("double") * col("cb_").cast("double")))
-          .as("lift")) -> new CacheHandle(bi)
+        (col("w").cast("double") / col("ca_")).as("confidence"))
   }
 }

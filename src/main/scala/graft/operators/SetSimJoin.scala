@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *  - prefix build: one df aggregate (combiner-heavy) + one per-doc
   *    row_number window — both shuffle the postings once;
   *  - verification fetches the two term ARRAYS per surviving candidate
-  *    (two hash joins against the persisted sets relation) and computes
+  *    (two hash joins against the checkpointed sets relation) and computes
   *    the exact intersection per row — O(|x|+|y|) per candidate, on
   *    candidates only, never on the all-pairs space;
   *  - ⌈t·|x|⌉ is computed in DECIMAL (the literal is the user's decimal
@@ -37,10 +37,31 @@ object SetSimJoin {
     * Output: (a, b, jaccard) with jaccard rounded to 6dp.
     */
   def jaccardPairs(docs: DataFrame, textCol: String, idCol: String,
-      minSim: Double, termK: Int = 1): DataFrame =
-    jaccardPairsManaged(docs, textCol, idCol, minSim, termK)._1
+      minSim: Double, termK: Int = 1): DataFrame = {
+    val (sets, _, pref) = prefixIndex(docs, textCol, idCol, minSim, termK)
+    val cand = pref.select(col("term"), col("id").as("a"))
+      .join(pref.select(col("term"), col("id").as("b")), "term")
+      .where(col("a") < col("b"))
+      .select(col("a"), col("b"))
+      .distinct()
+    cand
+      .join(sets.select(col("id").as("a"), col("hterms").as("ta_"),
+        col("sz").as("sa_")), "a")
+      .join(sets.select(col("id").as("b"), col("hterms").as("tb_"),
+        col("sz").as("sb_")), "b")
+      .withColumn("inter_", size(array_intersect(col("ta_"), col("tb_"))))
+      // threshold the UNROUNDED ratio — the prefix guarantee covers true
+      // jaccard >= t only; a round-then-compare would admit pairs just
+      // BELOW t whose candidates the filter legitimately never formed
+      // (the division of exact ints is one correctly-rounded IEEE op,
+      // identical on any engine). The emitted column rounds for display.
+      .withColumn("jac_", col("inter_").cast("double") /
+        (col("sa_") + col("sb_") - col("inter_")))
+      .where(col("jac_") >= minSim)
+      .select(col("a"), col("b"), round(col("jac_"), 6).as("jaccard"))
+  }
 
-  /** Shared prefix-index pipeline: (cached sets, full postings, prefix
+  /** Shared prefix-index pipeline: (checkpointed sets, full postings, prefix
     * postings) — ONE definition of the term order and the prefix-length
     * formula, read by both the join and the candidate-volume audit (a
     * formula fix must not be able to diverge between them). */
@@ -72,7 +93,10 @@ object SetSimJoin {
       // needs 2⁻⁶⁴; the jaccard would shift by 1 count — same exposure
       // ngramJaccardPairs already accepts for its hashed join key)
       .withColumn("hterms", transform(col("terms"), x => xxhash64(x)))
-      .persist() // postings build + both verification reattach sides
+      // read by the postings build and both verification reattach sides;
+      // a narrow projection, so no exchange could share it. Checkpointed:
+      // tokenized once per call, blocks freed with the returned plan
+      .localCheckpoint()
     val post = sets.select(col("id"), col("sz"), explode(col("terms")).as("term"))
     val dft = post.groupBy(col("term")).agg(count(lit(1)).as("df_"))
     val pref = post.join(dft, "term")
@@ -83,36 +107,6 @@ object SetSimJoin {
     (sets, post.select(col("term"), col("id")), pref)
   }
 
-  /** [[jaccardPairs]] plus a release handle for the internal sets cache
-    * entry — the [[SparseSim.cosinePairsManaged]] discipline: sweep
-    * drivers iterating many corpora release each corpus's entry after
-    * consuming the result instead of clearCache()-ing the session. */
-  def jaccardPairsManaged(docs: DataFrame, textCol: String, idCol: String,
-      minSim: Double, termK: Int = 1): (DataFrame, () => Unit) = {
-    val (sets, _, pref) = prefixIndex(docs, textCol, idCol, minSim, termK)
-    val cand = pref.select(col("term"), col("id").as("a"))
-      .join(pref.select(col("term"), col("id").as("b")), "term")
-      .where(col("a") < col("b"))
-      .select(col("a"), col("b"))
-      .distinct()
-    cand
-      .join(sets.select(col("id").as("a"), col("hterms").as("ta_"),
-        col("sz").as("sa_")), "a")
-      .join(sets.select(col("id").as("b"), col("hterms").as("tb_"),
-        col("sz").as("sb_")), "b")
-      .withColumn("inter_", size(array_intersect(col("ta_"), col("tb_"))))
-      // threshold the UNROUNDED ratio — the prefix guarantee covers true
-      // jaccard >= t only; a round-then-compare would admit pairs just
-      // BELOW t whose candidates the filter legitimately never formed
-      // (the division of exact ints is one correctly-rounded IEEE op,
-      // identical on any engine). The emitted column rounds for display.
-      .withColumn("jac_", col("inter_").cast("double") /
-        (col("sa_") + col("sb_") - col("inter_")))
-      .where(col("jac_") >= minSim)
-      .select(col("a"), col("b"),
-        round(col("jac_"), 6).as("jaccard")) -> (() => { sets.unpersist(false); () })
-  }
-
   /** Candidate-volume audit: (prefix-filtered candidates, full-index
     * candidates) — the pruning the prefix buys, as one row. Used by the
     * spec; at production scale this is the number to watch when tuning
@@ -120,13 +114,11 @@ object SetSimJoin {
     */
   def candidateCounts(docs: DataFrame, textCol: String, idCol: String,
       minSim: Double, termK: Int = 1): (Long, Long) = {
-    val (sets, post, pref) = prefixIndex(docs, textCol, idCol, minSim, termK)
+    val (_, post, pref) = prefixIndex(docs, textCol, idCol, minSim, termK)
     def pairsOf(p: DataFrame): Long = p.select(col("term"), col("id").as("a"))
       .join(p.select(col("term"), col("id").as("b")), "term")
       .where(col("a") < col("b"))
       .select(col("a"), col("b")).distinct().count()
-    val res = (pairsOf(pref), pairsOf(post))
-    sets.unpersist(false)
-    res
+    (pairsOf(pref), pairsOf(post))
   }
 }

@@ -47,22 +47,17 @@ object SparseSim {
     * unigrams fit topical retrieval.
     *
     * The capped postings table fans out to THREE consumers (norms + both
-    * join sides), so it persists — without that the whole tokenize →
-    * shingle → explode → count → window pipeline runs three times per
-    * query. `persist` (not `localCheckpoint`) is deliberate and measured:
-    * CacheManager dedupes identical plans, so REPEATED queries on the
-    * same corpus reuse one entry (localCheckpoint re-materialized every
-    * call — 2.3× slower steady-state on the bench corpus). The cost is
-    * that the entry lives until unpersisted: sweep drivers iterating
-    * MANY corpora should use [[cosinePairsManaged]] and release each
-    * corpus's postings once consumed, instead of `clearCache()`-ing the
-    * whole session.
-    * Measured on the bench corpus: persisting beats re-evaluation,
-    * and hashing terms to 64 bits before the join (ngramJaccardPairs'
-    * trick) measured SLOWER here, not faster — the md5 expression is
+    * join sides) and is not materialized: all three read one postings
+    * exchange, which Spark reuses, so the tokenize → shingle → explode
+    * pipeline runs once per query, runs no job when the plan is built,
+    * and leaves no cache entry behind. Only the counts' final merge and
+    * the df-cap window repeat per consumer, over shuffle output. (A
+    * persisted table pays off only when the same corpus is queried again
+    * while its cache entry is held, and that entry outlives the call.)
+    * Hashing terms to 64 bits before the join (ngramJaccardPairs' trick)
+    * measured SLOWER here, not faster — the md5 expression is
     * interpreted (no codegen) and its 3× re-evaluation cost exceeded the
-    * narrower-shuffle win; with the postings persisted the hash would be
-    * computed once, but string keys on a persisted table already win.
+    * narrower-shuffle win.
     *
     * Full A/B sweep (tools.ProbeSparse2, sf0.1 warm): the pair join +
     * dot aggregate IS the cost (2.5 s of 3.6 s) and is insensitive to
@@ -77,43 +72,45 @@ object SparseSim {
   def cosinePairs(docs: DataFrame, textCol: String, idCol: String,
       minSim: Double = 0.5, maxDf: Long = Long.MaxValue,
       termK: Int = 1): DataFrame =
-    cosinePairsManaged(docs, textCol, idCol, minSim, maxDf, termK)._1
+    scorePairs(termCounts(docs, textCol, idCol, termK), minSim, maxDf)
 
-  /** [[cosinePairs]] plus a release handle that unpersists the internal
-    * postings cache entry (non-blocking). Call it AFTER consuming the
-    * result — sweep drivers iterating many corpora bound their cache
-    * growth per-corpus this way without `clearCache()`-ing unrelated
-    * entries. Releasing before consumption is safe but re-runs the
-    * postings pipeline per consumer.
-    */
-  def cosinePairsManaged(docs: DataFrame, textCol: String, idCol: String,
-      minSim: Double = 0.5, maxDf: Long = Long.MaxValue,
-      termK: Int = 1): (DataFrame, CacheHandle) = {
+  /** The postings table: one (id, term, tf) row per document and term. */
+  private def termCounts(docs: DataFrame, textCol: String, idCol: String,
+      termK: Int): DataFrame = {
     require(termK >= 1)
     // tokens staged as a REAL column before shingling — an inline token
     // expression captured by the transform lambda re-tokenizes the doc
     // once per element (HOFs are interpreted, no CSE): O(tokens²)
     val terms = if (termK == 1) col("toks_")
       else TextFunctions.shinglesFromTokens(col("toks_"), termK)
-    val tfAll = docs
+    docs
       .select(col(idCol).as("id"),
         TextFunctions.tokens(lower(col(textCol))).as("toks_"))
       .select(col("id"), explode(terms).as("term"))
+      // a no-op (tokens are never null) stated once here, so the null
+      // filter Spark infers for the term join sides holds on every reader
+      // alike and they all share one postings exchange
+      .where(col("term").isNotNull)
       .groupBy(col("id"), col("term"))
       .agg(count(lit(1)).as("tf"))
-    val tf = (
+  }
+
+  /** Pairs (a < b) with cosine >= minSim over the postings whose term
+    * appears in at most maxDf documents. */
+  private def scorePairs(tfAll: DataFrame, minSim: Double,
+      maxDf: Long): DataFrame = {
+    val tf =
       if (maxDf == Long.MaxValue) tfAll
       else tfAll // df = docs per term (tf rows are per (doc, term))
         .withColumn("df_", count(lit(1)).over(Window.partitionBy(col("term"))))
         .where(col("df_") <= maxDf)
         .drop("df_")
-      ).persist() // read by norms + both join sides; released via the handle
     // per-doc norm over surviving terms: sqrt of an exact integer sum
     val norms = tf.groupBy(col("id"))
       .agg(sqrt(sum(col("tf") * col("tf")).cast("double")).as("norm"))
     val l = tf.select(col("term"), col("id").as("a"), col("tf").as("tfa"))
     val r = tf.select(col("term"), col("id").as("b"), col("tf").as("tfb"))
-    val pairs = l.join(r, "term")
+    l.join(r, "term")
       .where(col("a") < col("b"))
       .groupBy(col("a"), col("b"))
       .agg(sum(col("tfa") * col("tfb")).as("dot"))
@@ -123,7 +120,6 @@ object SparseSim {
         round(col("dot").cast("double") / (col("na") * col("nb")), 6))
       .where(col("cosine") >= minSim)
       .select(col("a"), col("b"), col("cosine"))
-    (pairs, new CacheHandle(tf))
   }
 
   /** [[cosinePairs]] with the df cap DERIVED from corpus statistics
@@ -167,21 +163,17 @@ object SparseSim {
     * distribution — the cap adapts to the data instead of trusting n as
     * a proxy for it. (`maxDfFrac` still applies as a ceiling so a tiny
     * corpus under a huge budget keeps dropping true stop terms.)
+    * The histogram and the pairs read one checkpointed postings table,
+    * so the corpus is tokenized once per call.
     */
   def cosinePairsBudget(docs: DataFrame, textCol: String, idCol: String,
       minSim: Double = 0.5, pairBudget: Long = 100000000L,
       maxDfFrac: Double = 0.5, termK: Int = 1,
       nDocs: Option[Long] = None): DataFrame = {
     require(pairBudget >= 1)
-    val spark = docs.sparkSession
-    val terms = if (termK == 1) col("toks_")
-      else TextFunctions.shinglesFromTokens(col("toks_"), termK)
-    val df = docs
-      .select(col(idCol).as("id"),
-        TextFunctions.tokens(lower(col(textCol))).as("toks_"))
-      .select(col("id"), explode(terms).as("term"))
-      .groupBy(col("id"), col("term")).agg(count(lit(1)).as("tf"))
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+    // blocks freed with the returned plan, no cache entry
+    val tf = termCounts(docs, textCol, idCol, termK).localCheckpoint()
+    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     // ≤63-row histogram — the only thing that reaches the driver
     val hist = df
       .groupBy(length(expr("bin(df)")).as("b"))
@@ -199,6 +191,6 @@ object SparseSim {
     val fracCap = math.max(2L,
       math.ceil(maxDfFrac * nDocs.getOrElse(docs.count())).toLong)
     val cap = math.min((1L << bMax) - 1, fracCap)
-    cosinePairs(docs, textCol, idCol, minSim, cap, termK)
+    scorePairs(tf, minSim, cap)
   }
 }

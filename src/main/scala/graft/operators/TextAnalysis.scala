@@ -352,10 +352,11 @@ object TextAnalysis {
     * (vocab² counts at worst), orders of magnitude smaller than the
     * corpus — one cooccurrence pass builds it, then each iteration is one
     * (join + combiner-heavy sum) over edge rows, shuffled on the word
-    * key. The edge table persists across iterations (one
-    * materialization, `iters` reads; corpus sweeps release it per-corpus
-    * through [[textrankManaged]]'s handle); scores never leave the
-    * cluster; top-k is
+    * key. The edge table is checkpointed when the operator is called
+    * (one corpus pass, `iters` + 1 reads; left lazy, the seed node set,
+    * which drops the weights, re-tokenizes the corpus under its own
+    * exchange), and its blocks are freed with the returned plan; scores
+    * never leave the cluster; top-k is
     * TakeOrderedAndProject. Fixed small `iters` (TextRank converges in a
     * handful) keeps the lineage bounded — no driver loop state beyond the
     * DataFrame reference.
@@ -366,26 +367,14 @@ object TextAnalysis {
     * kmeansRefine.
     */
   def textrank(docs: DataFrame, textCol: String, window: Int = 2,
-      iters: Int = 3, damping: Double = 0.85, topK: Int = 50): DataFrame =
-    textrankManaged(docs, textCol, window, iters, damping, topK)._1
-
-  /** [[textrank]] plus a release handle that unpersists the internal edge
-    * cache entry (non-blocking) — same sweep-driver contract as
-    * [[SparseSim.cosinePairsManaged]]: release AFTER consuming the
-    * result to bound cache growth per-corpus without a session-wide
-    * `clearCache()`. (`persist`, not `localCheckpoint`, so repeated runs
-    * on the same corpus dedupe through the CacheManager.)
-    */
-  def textrankManaged(docs: DataFrame, textCol: String, window: Int = 2,
-      iters: Int = 3, damping: Double = 0.85,
-      topK: Int = 50): (DataFrame, () => Unit) = {
+      iters: Int = 3, damping: Double = 0.85, topK: Int = 50): DataFrame = {
     require(iters >= 1 && topK >= 1 && damping > 0.0 && damping < 1.0)
     val pairs = cooccurrenceCounts(docs, textCol, window)
     val edges = pairs.select(col("w1").as("src"), col("w2").as("dst"), col("n"))
       .unionAll(pairs.select(col("w2").as("src"), col("w1").as("dst"), col("n")))
     val weighted = edges
       .join(edges.groupBy(col("src")).agg(sum(col("n")).as("wsrc")), "src")
-      .persist() // read once per iteration; released via the handle
+      .localCheckpoint()
     var pr = weighted.select(col("src").as("node")).distinct()
       .withColumn("score", lit(1.0))
     for (_ <- 1 to iters) {
@@ -397,10 +386,9 @@ object TextAnalysis {
         .agg(round(lit(1.0 - damping) + lit(damping) *
           sum(col("c").cast("decimal(28,14)")).cast("double"), 9).as("score"))
     }
-    val ranked = pr.select(col("node").as("word"), col("score"))
+    pr.select(col("node").as("word"), col("score"))
       .orderBy(col("score").desc, col("word"))
       .limit(topK)
-    (ranked, () => { weighted.unpersist(false); () })
   }
 
   /** Adjacent-symbol pair statistics over a character-initialized vocab —

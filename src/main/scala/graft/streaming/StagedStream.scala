@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.readOnce
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -104,7 +105,7 @@ private[streaming] final class StagedStream(spark: SparkSession,
       .option("checkpointLocation", dir("ckpt"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val out = dir(s"store/v$id")
-        StreamingIngest.readOnce(batch) {
+        readOnce(batch) {
           step(batch, latest.map(spark.read.parquet(_)))
             .write.mode("overwrite").parquet(out)
         }

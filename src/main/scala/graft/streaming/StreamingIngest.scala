@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.model.MemoryModel
+import graft.operators.readOnce
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -310,15 +311,6 @@ object StreamingIngest {
         .drop("rn", "batch_prev", "next_seq", "last_memory_id")
       out.write.mode("append").parquet(storePath)
     }
-  }
-
-  /** Run `body` with `batch` persisted, so a plan that scans it more than
-    * once reads and parses it once; a caller's own cache is left alone. */
-  private[streaming] def readOnce[T](batch: DataFrame)(body: => T): T = {
-    val owned = batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (owned) batch.persist()
-    try body
-    finally if (owned) batch.unpersist()
   }
 
   /** Start the file-source JSONL ingest (the reference's `tail -f` follow

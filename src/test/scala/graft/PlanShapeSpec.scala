@@ -21,6 +21,14 @@ class PlanShapeSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** The final adaptive plan after one execution: query stages that
+    * reuse an earlier stage show as `ReusedExchange` only here. */
+  private def finalPlan(name: String): String = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect()
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+  }
+
   private def count(p: String, pat: String): Int =
     p.linesIterator.count(_.contains(pat))
 
@@ -47,10 +55,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(count(p, "HashAggregate") >= 2, p.take(800)) // partial + final
   }
 
-  test("search_sparse_cosine: postings cached once, no cartesian, no broadcast of data scale") {
-    val p = plan("search_sparse_cosine")
-    assert(count(p, "CartesianProduct") == 0, p.take(800))
-    assert(count(p, "InMemoryTableScan") >= 3, p.take(800)) // norms + both join sides
+  test("search_sparse_cosine: postings built once, read by norms + both join sides, no cartesian") {
+    val p = finalPlan("search_sparse_cosine")
+    assert(count(p, "CartesianProduct") == 0, p.take(3000))
+    // tokenize → explode runs once: the norms and both join sides read
+    // one postings exchange, two of them as a reuse of the first
+    assert(count(p, "Generate explode") == 1, p.take(3000))
+    assert(count(p, "ReusedExchange") >= 2, p.take(3000))
   }
 
   test("text_cooccurrence / text_bigram_lm: no self-join — zero joins at all") {
@@ -255,9 +266,11 @@ class PlanShapeSpec extends SparkSpec {
     assert(count(p, "CartesianProduct") == 0, p.take(2000))
   }
 
-  test("dedup_ssjoin_prefix: cached sets feed postings + both verification sides, no cartesian") {
+  test("dedup_ssjoin_prefix: checkpointed sets feed postings + both verification sides, no cartesian") {
     val p = plan("dedup_ssjoin_prefix")
-    assert(count(p, "InMemoryTableScan") >= 3, p.take(2000))
+    // the sets are built once, by the checkpoint; the plan only reads them
+    assert(count(p, "Scan ExistingRDD") >= 3, p.take(2000))
+    assert(count(p, "Scan parquet") == 0, p.take(2000))
     assert(count(p, "CartesianProduct") == 0, p.take(2000))
   }
 

@@ -48,24 +48,6 @@ class SparseSimSpec extends SparkSpec {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
   }
 
-  test("cosinePairsManaged: release handle drops the postings cache entry, result unchanged") {
-    import spark.implicits._
-    val df = Seq((1L, "x p"), (2L, "x p q"), (3L, "r s")).toDF("doc_id", "text")
-    val (pairs, release) = SparseSim.cosinePairsManaged(df, "text", "doc_id", minSim = 0.0)
-    val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((1L, 2L)))
-    // assert on THIS handle's CacheManager entry, not the global
-    // getPersistentRDDs count — the global count is racy when other
-    // suites persist/unpersist concurrently (round-9 judge finding)
-    assert(release.isCached,
-      "postings should be cached while the result is consumed")
-    release()
-    // uncacheQuery drops the CacheManager entry synchronously even with
-    // blocking=false (only block eviction is async) — no polling needed
-    assert(!release.isCached,
-      "release() must drop the postings cache entry")
-  }
-
   test("cosinePairsAuto: cap derived from corpus size") {
     import spark.implicits._
     val df = Seq((1L, "x p"), (2L, "x p"), (3L, "x q")).toDF("doc_id", "text")

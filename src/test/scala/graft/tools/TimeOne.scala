@@ -1,7 +1,9 @@
 package graft.tools
 
 /** Times gates twice each at sf0.1 under the bench's own session
-  * (GateSession), so the plans timed are the plans Bench runs.
+  * (GateSession), so the plans timed are the plans Bench runs. Like
+  * Bench, it clears the cache after each run, outside the timed region,
+  * so a second run does not read the first run's cache entries.
   * `Test/runMain graft.tools.TimeOne <gate...>` */
 object TimeOne {
   def main(args: Array[String]): Unit = {
@@ -13,6 +15,7 @@ object TimeOne {
       graft.SparkEntry.queries(name)(s, d)
         .write.format("noop").mode("overwrite").save()
       println(f"TIMED $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      s.sharedState.cacheManager.clearCache()
     }
     s.stop()
   }
