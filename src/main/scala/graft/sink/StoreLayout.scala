@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
 object StoreLayout {
 
   /** Write `df` to `path` in the optimized layout. `mode` defaults to
-    * overwrite (the batch-rebuild shape); streaming appends go through
-    * [[graft.streaming.StreamingIngest.ingestBatch]] instead.
+    * overwrite (the batch-rebuild shape); follow-mode appends go through
+    * [[graft.streaming.StreamingIngest.startJsonlIngest]] instead.
     *
     * `filesPerPartition` splits each partition directory across that many
     * writer tasks (hash of the sort key, else a uniform spread). The

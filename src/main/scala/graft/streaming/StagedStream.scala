@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.operators.readOnce
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -16,10 +15,10 @@ import org.apache.spark.sql.types._
   * starts ONE query ([[toMemory]], [[fold]] or [[run]]), drains it with
   * `processAllAvailable` after the start and after each step, and stops
   * it in `finally`. The whole run holds the gate-scale partition pin
-  * (`partsKey`, see [[StagedStream.gatePartsPinned]]) and, for
-  * transformWithState operators (`rocksDb`), the RocksDB state store
-  * provider TWS requires; both are captured at query start, and fold
-  * plans read the session conf on every batch, so one pin covers both.
+  * (`partsKey`, see [[StagedStream.gatePartsPinned]]): it is captured at
+  * query start, and fold plans read the session conf on every batch.
+  * For transformWithState operators (`rocksDb`) the query starts under
+  * [[StreamingIngest.withRocksDbStateStore]].
   */
 private[streaming] final class StagedStream(spark: SparkSession,
     workDir: String, partsKey: String = "graft.stream.parts",
@@ -73,13 +72,11 @@ private[streaming] final class StagedStream(spark: SparkSession,
     * drain again; the query stops even if a step fails. */
   def run(start: => StreamingQuery, steps: (() => Unit)*): Unit =
     StagedStream.gatePartsPinned(spark, partsKey) {
-      withStateStore {
-        val q = start
-        try {
-          q.processAllAvailable()
-          steps.foreach { step => step(); q.processAllAvailable() }
-        } finally q.stop()
-      }
+      val q = if (rocksDb) StreamingIngest.withRocksDbStateStore(spark)(start) else start
+      try {
+        q.processAllAvailable()
+        steps.foreach { step => step(); q.processAllAvailable() }
+      } finally q.stop()
     }
 
   /** Run `out` into an in-memory table and return that table. */
@@ -93,42 +90,28 @@ private[streaming] final class StagedStream(spark: SparkSession,
   }
 
   /** Fold each micro-batch into a versioned parquet store and return its
-    * final version. `step(batch, prev)` builds the next version from the
-    * micro-batch (read once, so a step may use it more than once) and the
-    * previous version (None for the first batch). Each batch writes a NEW
-    * version directory: overwriting the directory a batch is reading is
-    * the classic self-overwrite corruption. */
+    * final version. `step(batch, prev, save)` builds the next version from
+    * the micro-batch and the previous version (None for the first batch)
+    * and hands it to `save`, which writes it. A step that reads the batch
+    * more than once calls `save` inside `readOnce(batch)`, so the batch's
+    * JSONL is parsed once; a step that reads it once persists nothing.
+    * Each batch writes a NEW version directory: overwriting the directory
+    * a batch is reading is the classic self-overwrite corruption. */
   def fold(in: DataFrame, steps: (() => Unit)*)(
-      step: (DataFrame, Option[DataFrame]) => DataFrame): DataFrame = {
+      step: (DataFrame, Option[DataFrame], DataFrame => Unit) => Unit): DataFrame = {
     var latest: Option[String] = None
     run(in.writeStream
       .option("checkpointLocation", dir("ckpt"))
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val out = dir(s"store/v$id")
-        readOnce(batch) {
-          step(batch, latest.map(spark.read.parquet(_)))
-            .write.mode("overwrite").parquet(out)
-        }
+        step(batch, latest.map(spark.read.parquet(_)),
+          _.write.mode("overwrite").parquet(out))
         latest = Some(out)
       }
       .start(), steps: _*)
     spark.read.parquet(latest.getOrElse(
       sys.error(s"StagedStream.fold: no micro-batch ran in $workDir")))
   }
-
-  private def withStateStore[T](body: => T): T =
-    if (!rocksDb) body
-    else {
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try body
-      finally prev match {
-        case Some(p) => spark.conf.set(key, p)
-        case None => spark.conf.unset(key)
-      }
-    }
 }
 
 private[streaming] object StagedStream {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.model.MemoryModel
 import graft.operators.readOnce
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -14,14 +13,12 @@ import org.apache.spark.sql.types._
   *
   * The reference assigns `sequence_order` by reading back the session's
   * last memory before every insert (storage.py:113-143, server.py:96-103):
-  * one Qdrant round-trip per event, arrival-order semantics. Here the same
-  * state lives either
-  *  - in [[sequencedTws]]'s `transformWithState` per-session state (one
-  *    shuffle per micro-batch, state store holds (nextSeq, lastId) per
-  *    session — bounded, keyed, checkpointed), or
-  *  - in the store itself via [[ingestBatch]] (foreachBatch: window over
-  *    the batch + join against the stored per-session max — idempotent on
-  *    memory_id, exactly-once on replays with the same batch).
+  * one Qdrant round-trip per event, arrival-order semantics. Here that
+  * state lives in [[TwsSequencer]]'s `transformWithState` per-session
+  * state — (nextSeq, lastId) plus the session's seen ids, keyed and
+  * checkpointed — so follow-mode ingest ([[startJsonlIngest]]) never
+  * reads the store back: a micro-batch costs one shuffle of the batch,
+  * whatever the store holds.
   *
   * Event-time operators for the extension surface: [[hourlyRollup]]
   * (watermarked tumbling window) and [[sessionWindows]] (built-in
@@ -32,38 +29,48 @@ object StreamingIngest {
 
   /** A tool-call event on the stream (arrival order within a micro-batch is
     * normalized to (ts, memoryId) — the reference's arrival-order semantics
-    * made deterministic). */
+    * made deterministic). `props` is the call's payload, carried through. */
   final case class ToolCall(
       memoryId: String, sessionId: String, tool: String,
-      ts: java.sql.Timestamp, value: Double)
+      ts: java.sql.Timestamp, value: Option[Double],
+      props: Option[String] = None)
 
   final case class SequencedCall(
       memoryId: String, sessionId: String, tool: String,
-      ts: java.sql.Timestamp, value: Double,
+      ts: java.sql.Timestamp, value: Option[Double], props: Option[String],
       sequenceOrder: Int, precedingMemoryId: Option[String])
 
   final case class SeqState(nextSeq: Int, lastId: Option[String])
 
   /** Per-session sequence assignment with keyed state — the streaming
-    * twin of [[MemoryModel.sessionize]] — on Spark 4's `transformWithState`,
-    * the arbitrary-state API that supersedes `flatMapGroupsWithState`:
-    * typed, NAMED state variables with per-variable encoders and TTL
-    * (vs one opaque state blob), timers as first-class citizens, and a
-    * RocksDB-backed store (the harness pins the provider — TWS requires
-    * it). Per-session gapless sequence, arrival order normalized to
-    * (ts, memoryId); state per session is two fields, so the store scales
-    * with live sessions, not history. The engine surface exercised:
-    * init-time state registration via `getHandle.getValueState`,
-    * `exists()/get()/update()` row handling, and state carried across
-    * micro-batches by the TWS operator.
+    * twin of [[graft.model.MemoryModel.sessionize]] — on Spark 4's
+    * `transformWithState`, the arbitrary-state API that supersedes
+    * `flatMapGroupsWithState`: typed, NAMED state variables with
+    * per-variable encoders and TTL (vs one opaque state blob), timers as
+    * first-class citizens, and a RocksDB-backed store ([[withRocksDbStateStore]] — TWS requires it).
+    * Per-session gapless sequence, arrival order normalized to
+    * (ts, memoryId), a null ts first (Spark's ascending order).
+    *
+    * State per session: a `ValueState` (nextSeq, lastId), and a
+    * `MapState` of the session's ids already sequenced. A call whose id
+    * the session has seen — re-sent by a producer in the same or a later
+    * file — is dropped, so the sequence stays gapless and no id is
+    * stored twice. The seen set has no TTL: an expiring set would let a
+    * late re-send through. It grows with the session's ids, as the store
+    * does (SCALE_NOTES).
     */
   class TwsSequencer extends org.apache.spark.sql.streaming.StatefulProcessor[
       String, ToolCall, SequencedCall] {
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
+    import org.apache.spark.sql.streaming.{MapState, TimeMode, TimerValues, TTLConfig, ValueState}
     @transient private var st: ValueState[SeqState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+    @transient private var seen: MapState[String, Boolean] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       st = getHandle.getValueState[SeqState]("seq",
         org.apache.spark.sql.Encoders.product[SeqState], TTLConfig.NONE)
+      seen = getHandle.getMapState[String, Boolean]("seen",
+        org.apache.spark.sql.Encoders.STRING,
+        org.apache.spark.sql.Encoders.scalaBoolean, TTLConfig.NONE)
+    }
     override def handleInputRows(key: String, rows: Iterator[ToolCall],
         tv: TimerValues): Iterator[SequencedCall] = {
       var s = if (st.exists()) st.get() else SeqState(1, None)
@@ -72,12 +79,17 @@ object StreamingIngest {
       // ORDER BY ts, memory_id exactly
       def us(t: java.sql.Timestamp): Long =
         t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-      val out = rows.toSeq.sortBy(c => (us(c.ts), c.memoryId)).map { c =>
-        val r = SequencedCall(c.memoryId, key, c.tool, c.ts, c.value,
-          s.nextSeq, s.lastId)
-        s = SeqState(s.nextSeq + 1, Some(c.memoryId))
-        r
-      }
+      val out = rows.toSeq.sortBy(c => (Option(c.ts).map(us), c.memoryId))
+        .flatMap { c =>
+          if (seen.containsKey(c.memoryId)) None
+          else {
+            seen.updateValue(c.memoryId, true)
+            val r = SequencedCall(c.memoryId, key, c.tool, c.ts, c.value,
+              c.props, s.nextSeq, s.lastId)
+            s = SeqState(s.nextSeq + 1, Some(c.memoryId))
+            Some(r)
+          }
+        }
       st.update(s)
       out.iterator
     }
@@ -91,13 +103,36 @@ object StreamingIngest {
         OutputMode.Append())
   }
 
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Run `body` — a streaming query's `.start()` — with the RocksDB state
+    * store provider pinned in the session conf, then restore the
+    * caller's setting. transformWithState requires that provider. A query
+    * clones the session conf when it is constructed inside `.start()`,
+    * and a restarted query takes the provider from its checkpoint, so a
+    * pin around the start covers the query's whole life.
+    */
+  private[streaming] def withRocksDbStateStore[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, Seq(RocksDbProvider))(body)
+
+  /** Run `body` with `pins` set in the session conf, then restore each
+    * key's previous value (or unset it). */
+  private def withConf[T](spark: SparkSession, pins: Seq[(String, String)])(body: => T): T = {
+    val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pins.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(p)) => spark.conf.set(k, p)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Drive [[sequencedTws]] end-to-end over staged JSONL — the
     * CORRECTNESS-gate harness for the transformWithState path, mirroring
     * [[stagedIngestRoundtrip]]'s two event-time-split stagings so the
     * named ValueState must carry (nextSeq, lastId) across the micro-batch
-    * boundary. TWS requires the RocksDB state store provider; the
-    * harness pins it for the stream's lifetime and restores the session
-    * default after (provider choice is captured at query start).
+    * boundary. The staged calls carry no payload; `props` reads as null.
     */
   def stagedTwsSequencedRoundtrip(spark: SparkSession, src: DataFrame,
       workDir: String, typed: Boolean = false): DataFrame = {
@@ -112,7 +147,7 @@ object StreamingIngest {
     val calls = src.select(wire.fieldNames.toSeq.map(col): _*)
     val (mid, _) = ss.midAndMax(calls)
     ss.stage(calls.where(col("ts") < lit(mid))) // micro-batch 1: sequences start at 1
-    val parsed = ss.read(wire).as[ToolCall]
+    val parsed = ss.read(wire.add("props", StringType)).as[ToolCall]
     ss.toMemory(
       if (typed) typeCountsTws(parsed).toDF() else sequencedTws(parsed).toDF(),
       OutputMode.Append,
@@ -250,76 +285,43 @@ object StreamingIngest {
       .where(col("userId") >= 0)
   }
 
-  /** foreachBatch body: append a micro-batch to the parquet store,
-    * continuing each session's sequence from the stored maximum (A1) and
-    * chaining preceding_memory_id across the batch boundary (J1).
-    *
-    * Exactly-once on replays: foreachBatch delivers at-least-once, so a
-    * replayed batch is first anti-joined against the stored memory_ids of
-    * its own sessions — already-written rows drop out, and the survivors
-    * continue from the stored per-session max (which already accounts for
-    * the first delivery), keeping sequence_order gapless.
-    *
-    * Expects canonical columns (memory_id, session_id, tool, timestamp,
-    * ...). Both store reads (the per-session tail aggregate and the
-    * memory_id anti-join side) are restricted to the batch's sessions — at
-    * scale, with the store laid out by session/date, they are
-    * partition-pruned scans, not full passes.
-    */
-  def ingestBatch(batch: DataFrame, storePath: String): Unit = {
-    val spark = batch.sparkSession
-    val exists = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(storePath))
-    // once the store exists the batch feeds both the session filter and
-    // the replay anti-join: read once, its JSONL is parsed once, not twice
-    readOnce(batch) {
-      val (tails, fresh) =
-        if (!exists) {
-          val emptyTails = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(Seq(
-              StructField("session_id", StringType),
-              StructField("last_memory_id", StringType),
-              StructField("next_seq", IntegerType))))
-          (emptyTails, batch)
-        } else {
-          // the batch's sessions as a literal set: one job over the
-          // persisted batch, after which the plan scans the batch once
-          // (a semi-join side scans it in every branch that reads the
-          // store — 13 jobs per micro-batch against 9)
-          val sessions = batch.select("session_id").distinct()
-            .collect().map(_.getString(0))
-          val stored = spark.read.parquet(storePath)
-            .where(col("session_id").isin(sessions: _*))
-          val t = MemoryModel.lastMemoryPerSession(stored)
-            .select(col("session_id"), col("last_memory_id"),
-              col("next_seq").cast("int").as("next_seq"))
-          // replay dedup: drop rows whose memory_id is already stored
-          val f = batch.join(stored.select("memory_id"), Seq("memory_id"), "left_anti")
-          (t, f)
-        }
-
-      val w = Window.partitionBy("session_id").orderBy(col("timestamp"), col("memory_id"))
-      val out = fresh
-        .withColumn("rn", row_number().over(w))
-        .withColumn("batch_prev", lag(col("memory_id"), 1).over(w))
-        .join(broadcast(tails), Seq("session_id"), "left")
-        .withColumn("sequence_order",
-          col("rn") - 1 + coalesce(col("next_seq"), lit(1)))
-        .withColumn("preceding_memory_id",
-          coalesce(col("batch_prev"), col("last_memory_id")))
-        .drop("rn", "batch_prev", "next_seq", "last_memory_id")
-      out.write.mode("append").parquet(storePath)
-    }
-  }
-
   /** Start the file-source JSONL ingest (the reference's `tail -f` follow
     * mode, log_viewer.py:151-172, as a real stream): readStream.text over a
-    * directory of JSONL tool-call lines → parse → foreachBatch append with
-    * sequence continuation.
+    * directory of JSONL tool-call lines → parse → [[sequencedTws]] →
+    * foreachBatch write. The store is never read back: each session's
+    * tail and seen ids live in the TWS state, checkpointed with the query,
+    * so a micro-batch costs one shuffle of its own rows.
+    *
+    * The write is idempotent by micro-batch id ([[writeBatch]]): batch
+    * `id`'s files are named `batch-<id>-part-…`, and a batch Spark re-runs
+    * (foreachBatch is at-least-once) first deletes its own earlier files.
+    * A re-run reads the same files against the same state version, so it
+    * writes the same rows. An id a producer re-sends in a later file is
+    * dropped by the seen-id state.
+    *
+    * The state lives in `checkpoint`, so a store continues only under the
+    * checkpoint that wrote it; starting a fresh checkpoint over an existing
+    * store fails rather than restarting its sequences. A checkpoint on the
+    * local file system is written through Spark's FileSystem-based
+    * checkpoint manager: the default FileContext-based one runs a `chmod`
+    * process for every checkpoint file it creates and a `readlink`
+    * process for every rename on a local path, about 90 processes per
+    * micro-batch (offsets, commits and the state store's files), where
+    * the FileSystem API creates and renames in-process. Lines without a
+    * memory_id or session_id carry nothing to sequence and are dropped.
+    * Store columns: memory_id, session_id, tool, timestamp, value, props,
+    * sequence_order, preceding_memory_id.
     */
   def startJsonlIngest(spark: SparkSession, inDir: String, storePath: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val store = new Path(storePath)
+    val checkpointFs = new Path(checkpoint).getFileSystem(hadoopConf)
+    require(!store.getFileSystem(hadoopConf).exists(store) ||
+      checkpointFs.exists(new Path(checkpoint, "offsets")),
+      s"startJsonlIngest: $storePath was written under another checkpoint than $checkpoint")
     val schema = StructType(Seq(
       StructField("memory_id", StringType),
       StructField("session_id", StringType),
@@ -327,18 +329,49 @@ object StreamingIngest {
       StructField("timestamp", TimestampType),
       StructField("value", DoubleType),
       StructField("props", StringType))) // tool-call payload; absent → null
-    val parsed = spark.readStream
+    val calls = spark.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
       .text(inDir)
       .select(from_json(col("value"), schema).as("j"))
-      .select(col("j.*"))
-    parsed.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        ingestBatch(batch.toDF(), storePath)
-      }
-      .start()
+      .where(col("j.memory_id").isNotNull && col("j.session_id").isNotNull)
+      .select(col("j.memory_id").as("memoryId"), col("j.session_id").as("sessionId"),
+        col("j.tool"), col("j.timestamp").as("ts"), col("j.value"), col("j.props"))
+      .as[ToolCall]
+    val sequenced = sequencedTws(calls).select(
+      col("memoryId").as("memory_id"), col("sessionId").as("session_id"),
+      col("tool"), col("ts").as("timestamp"), col("value"), col("props"),
+      col("sequenceOrder").as("sequence_order"),
+      col("precedingMemoryId").as("preceding_memory_id"))
+    val checkpointManager = "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    val localPins = if (checkpointFs.getScheme == "file") Seq(checkpointManager) else Nil
+    withConf(spark, RocksDbProvider +: localPins) {
+      sequenced.writeStream
+        .option("checkpointLocation", checkpoint)
+        .outputMode(OutputMode.Append)
+        .foreachBatch { (batch: DataFrame, id: Long) => writeBatch(batch, storePath, id) }
+        .start()
+    }
+  }
+
+  /** Write micro-batch `id` into the flat parquet store `storePath` as
+    * files named `batch-<id>-part-…`, replacing any files an earlier run
+    * of the same batch left. The batch is written to the hidden directory
+    * `_batch-<id>` (readers skip `_` names) and its part files are then
+    * renamed into the store. */
+  private def writeBatch(batch: DataFrame, storePath: String, id: Long): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(storePath)
+    val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val prefix = s"batch-$id-"
+    Option(fs.globStatus(new Path(root, prefix + "*"))).toSeq.flatten
+      .foreach(f => fs.delete(f.getPath, false))
+    val staging = new Path(root, "_" + prefix.init)
+    batch.write.mode("overwrite").parquet(staging.toString)
+    fs.listStatus(staging).map(_.getPath).filter(_.getName.startsWith("part-"))
+      .foreach(p => require(fs.rename(p, new Path(root, prefix + p.getName)),
+        s"startJsonlIngest: could not move $p into $storePath"))
+    fs.delete(staging, true)
   }
 
   /** Drive [[startJsonlIngest]] end-to-end over staged JSONL and return the
@@ -348,10 +381,10 @@ object StreamingIngest {
     *
     * The source rows are split into two stagings at the midpoint timestamp,
     * with `processAllAvailable` between them, so the store is built across
-    * ≥2 micro-batches with sequence state continued from the stored
-    * per-session max. Batch 1 is then REPLAYED through [[ingestBatch]]
-    * (foreachBatch is at-least-once) — the replay-dedup anti-join must
-    * no-op, or ids duplicate and sequences gap.
+    * ≥2 micro-batches with sequence state continued in the TWS state. Batch
+    * 1 is then RE-SENT as a third file (a producer's at-least-once
+    * delivery): every one of its ids must drop out, or ids duplicate and
+    * sequences gap.
     *
     * Because the split is by event time, every batch-1 row precedes every
     * batch-2 row within a session, so the final store must equal one global
@@ -370,12 +403,12 @@ object StreamingIngest {
       "value") ++ src.columns.find(_ == "props")).map(col): _*) // tool-call payload
     val (mid, _) = ss.midAndMax(calls, "timestamp")
     val batch1 = calls.where(col("timestamp") < lit(mid))
-    ss.stage(batch1) // micro-batch 1: fresh store
+    ss.stage(batch1) // micro-batch 1: fresh state
     ss.run(startJsonlIngest(spark, ss.dir("in"), store, ss.dir("ckpt")),
-      // micro-batch 2: continues stored sequences
+      // micro-batch 2: continues the state's sequences
       () => ss.stage(calls.where(col("timestamp") >= lit(mid))),
-      // replayed delivery: must drop out entirely
-      () => ingestBatch(batch1, store))
+      // re-sent delivery: must drop out entirely
+      () => ss.stage(batch1))
     spark.read.parquet(store)
   }
 
@@ -809,11 +842,11 @@ object StreamingIngest {
     ss.stage(ev.where(col("ts") < lit(mid))) // batch 0: build the dimension
     // batch 1+: incremental folds
     ss.fold(ss.read(wire), () => ss.stage(ev.where(col("ts") >= lit(mid)))) {
-      case (batch, None) =>
-        graft.operators.Scd.buildScd2(batch, "user_id", "ts", "event_id", stateCols)
-      case (batch, Some(prev)) =>
-        graft.operators.Scd.applyScd2(prev, batch,
-          "user_id", "ts", "event_id", stateCols)
+      case (batch, None, save) =>
+        save(graft.operators.Scd.buildScd2(batch, "user_id", "ts", "event_id", stateCols))
+      case (batch, Some(prev), save) =>
+        save(graft.operators.Scd.applyScd2(prev, batch,
+          "user_id", "ts", "event_id", stateCols))
     }
   }
 
@@ -858,7 +891,7 @@ object StreamingIngest {
     // row a null term (tokens are never null)
     val nl = lit(null).cast("long")
     val st = ss.fold(ss.read(wire), // batch 1+: incremental folds
-        () => ss.stage(src.where(col("doc_id") >= mid))) { (batch, prev) =>
+        () => ss.stage(src.where(col("doc_id") >= mid))) { (batch, prev, save) =>
       val toks = batch.select(col("doc_id"),
         graft.functions.TextFunctions.tokens(lower(col("text"))).as("toks_"))
       val dfDelta = toks
@@ -878,9 +911,11 @@ object StreamingIngest {
               .agg(sum(col("n_docs")).as("n_docs"),
                 sum(col("sum_dl")).as("sum_dl")))
       }
-      dfNext.select(col("term"), col("df"), nl.as("n_docs"), nl.as("sum_dl"))
-        .unionByName(totNext.select(lit(null).cast("string").as("term"),
-          nl.as("df"), col("n_docs"), col("sum_dl")))
+      // the df and totals deltas both read the batch
+      readOnce(batch)(save(
+        dfNext.select(col("term"), col("df"), nl.as("n_docs"), nl.as("sum_dl"))
+          .unionByName(totNext.select(lit(null).cast("string").as("term"),
+            nl.as("df"), col("n_docs"), col("sum_dl")))))
     }
     st.where(col("term").isNotNull).select(col("term"), col("df"))
       .crossJoin(st.where(col("term").isNull).select(col("n_docs"), col("sum_dl")))
@@ -916,11 +951,11 @@ object StreamingIngest {
     ss.stage(src.where(col("k") < mid), oneFile = false) // batch 0: seed the cell store
     val sketch = ss.fold(ss.read(StructType(Seq(StructField("k", LongType)))),
         // batch 1+: additive folds
-        () => ss.stage(src.where(col("k") >= mid), oneFile = false)) { (batch, prev) =>
+        () => ss.stage(src.where(col("k") >= mid), oneFile = false)) { (batch, prev, save) =>
       val delta = graft.operators.CountMin.build(batch, "k", depth, width)
-      prev.fold(delta)(_.unionByName(delta)
+      save(prev.fold(delta)(_.unionByName(delta)
         .groupBy(col("d"), col("bucket"))
-        .agg(sum(col("cnt")).as("cnt")))
+        .agg(sum(col("cnt")).as("cnt"))))
     }
     val exact = items.groupBy(col(keyCol).as("key"))
       .agg(count(lit(1)).as("true_cnt"))
@@ -953,16 +988,16 @@ object StreamingIngest {
       StructField("user_id", LongType),
       StructField("event_type", StringType)))
     val arms = ss.fold(ss.read(wire),
-        () => ss.stage(half(1), oneFile = false)) { (batch, prev) => // batch 1+: additive folds
+        () => ss.stage(half(1), oneFile = false)) { (batch, prev, save) => // batch 1+: additive folds
       val delta = batch.select(
           pmod(graft.functions.HashFunctions.hash64(concat(
             col("user_id").cast("string"), lit("#ab"))), lit(2)).as("arm"),
           when(col("event_type") === "error", 1L).otherwise(0L).as("bad"))
         .groupBy(col("arm"))
         .agg(count(lit(1)).as("n"), sum(col("bad")).as("x"))
-      prev.fold(delta)(_.unionByName(delta)
+      save(prev.fold(delta)(_.unionByName(delta)
         .groupBy(col("arm"))
-        .agg(sum(col("n")).as("n"), sum(col("x")).as("x")))
+        .agg(sum(col("n")).as("n"), sum(col("x")).as("x"))))
     }
     arms.agg(
         sum(when(col("arm") === 0, col("n")).otherwise(0L)).cast("long")
@@ -1004,9 +1039,9 @@ object StreamingIngest {
       StructField("user_id", LongType),
       StructField("day", StringType)))
     val presence = ss.fold(ss.read(wire),
-        () => ss.stage(half(1), oneFile = false)) { (batch, prev) => // batch 1+: set-union folds
+        () => ss.stage(half(1), oneFile = false)) { (batch, prev, save) => // batch 1+: set-union folds
       val delta = batch.select(col("user_id"), col("day")).distinct()
-      prev.fold(delta)(_.unionByName(delta).distinct())
+      save(prev.fold(delta)(_.unionByName(delta).distinct()))
     }
     val ud = presence.select(col("user_id"), to_date(col("day")).as("day"))
     val spine = broadcast(ud.select(col("day").as("d")).distinct())
@@ -1047,7 +1082,7 @@ object StreamingIngest {
       StructField("us", LongType)))
     val gap = 30L * 60 * 1000000L
     val run = ss.fold(ss.read(wire, filesPerTrigger = 1),
-        () => ss.stage(half(1))) { (batch, prev) => // batch 1+: additive folds
+        () => ss.stage(half(1))) { (batch, prev, save) => // batch 1+: additive folds
       val w = Window.partitionBy(col("user_id")).orderBy(col("us"))
       val sessions = batch
         .withColumn("prev", lag(col("us"), 1).over(w))
@@ -1063,9 +1098,10 @@ object StreamingIngest {
           lit(-1L).as("d"), lit(0L).as("starts")))
         .groupBy(col("t"))
         .agg(sum(col("d")).as("d"), sum(col("starts")).as("starts"))
-      prev.fold(delta)(_.unionByName(delta)
+      // the start and end branches both read the batch
+      readOnce(batch)(save(prev.fold(delta)(_.unionByName(delta)
         .groupBy(col("t"))
-        .agg(sum(col("d")).as("d"), sum(col("starts")).as("starts")))
+        .agg(sum(col("d")).as("d"), sum(col("starts")).as("starts")))))
     }
       .withColumn("conc", sum(col("d")).over(
         Window.orderBy(col("t")).rowsBetween(Window.unboundedPreceding, 0)))
@@ -1102,12 +1138,15 @@ object StreamingIngest {
       StructField("doc_id", LongType),
       StructField("text", StringType)))
     val grams = ss.fold(ss.read(wire),
-        () => ss.stage(src.where(col("doc_id") % 2 === 1))) { (batch, prev) =>
+        () => ss.stage(src.where(col("doc_id") % 2 === 1))) { (batch, prev, save) =>
       val pos = graft.operators.Dedup.shinglePositions(batch, "text", "doc_id", k)
-      pos.write.mode("append").parquet(posDir)
       val delta = pos.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-      prev.fold(delta)(_.unionByName(delta)
-        .groupBy(col("h")).agg(sum(col("cnt")).as("cnt")))
+      // two writes read the batch: the position log and the next version
+      readOnce(batch) {
+        pos.write.mode("append").parquet(posDir)
+        save(prev.fold(delta)(_.unionByName(delta)
+          .groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))))
+      }
     }
     val dupPos = spark.read.parquet(posDir)
       .join(grams.where(col("cnt") >= 2).select(col("h")), "h")
@@ -1163,7 +1202,7 @@ object StreamingIngest {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType))))
     // fold batch 2 against corpus ∪ accepted(1)
-    val fin = ss.fold(ss.read(wire), () => ss.stage(batchOf(2))) { (batch, prev) =>
+    val fin = ss.fold(ss.read(wire), () => ss.stage(batchOf(2))) { (batch, prev, save) =>
       val assigned = graft.operators.Similarity.ivfAssign(
         batch, "embedding", "vec_id", cents)
         .select(col("cell"), col("vec_id"), col("embedding"))
@@ -1173,9 +1212,10 @@ object StreamingIngest {
         .where(round(graft.functions.VectorFunctions.cosine(
           col("n.embedding"), col("c.embedding"), dims), 6) >= tau)
         .select(col("n.vec_id")).distinct()
-      stored.unionByName(
+      // the duplicate probe and the anti-join both read the batch
+      readOnce(batch)(save(stored.unionByName(
         assigned.join(dupIds, Seq("vec_id"), "left_anti")
-          .select(col("cell"), col("vec_id"), col("embedding")))
+          .select(col("cell"), col("vec_id"), col("embedding")))))
     }.select(col("vec_id"))
     src.select(col("vec_id"), (col("vec_id") % 3).cast("int").as("batch"))
       .join(fin.withColumn("acc_", lit(true)), Seq("vec_id"), "left")
@@ -1255,7 +1295,7 @@ object StreamingIngest {
         .unionByName(n.select(lit("n").as("kind"), nl.as("a"), nl.as("b"),
           nl.as("w"), nl.as("it"), nl.as("c"), col("nb")))
     val st = ss.fold(ss.read(wire), // batch 1+: incremental folds
-        () => ss.stage(src.where(col("bk") >= mid))) { (batch, prev) =>
+        () => ss.stage(src.where(col("bk") >= mid))) { (batch, prev, save) =>
       val bi = batch.select(col("bk"), col("it")).distinct()
       val pairDelta = bi.select(col("bk"), col("it").as("a"))
         .join(bi.select(col("bk"), col("it").as("b")), "bk")
@@ -1263,7 +1303,7 @@ object StreamingIngest {
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("w"))
       val itemDelta = bi.groupBy(col("it")).agg(count(lit(1)).as("c"))
       val nDelta = bi.agg(count_distinct(col("bk")).as("nb"))
-      prev match {
+      val next = prev match {
         case None => kinded(pairDelta, itemDelta, nDelta)
         case Some(st) =>
           kinded(
@@ -1277,6 +1317,8 @@ object StreamingIngest {
               .unionByName(nDelta)
               .agg(sum(col("nb")).as("nb")))
       }
+      // the pair, item and basket-count deltas all read the batch
+      readOnce(batch)(save(next))
     }
     val nb = st.where(col("kind") === "n")
       .select(col("nb")).collect()(0).getLong(0)
@@ -1360,10 +1402,10 @@ object StreamingIngest {
       StructField("op", StringType)))
     val order = Seq("ts_us", "event_id")
     ss.fold(ss.read(wire), // batch 1+: associative winner folds
-        () => ss.stage(src.where(col("event_id") >= mid), oneFile = false)) { (batch, prev) =>
+        () => ss.stage(src.where(col("event_id") >= mid), oneFile = false)) { (batch, prev, save) =>
       val bw = graft.operators.Scd.cdcWinners(batch, "user_id", order)
-      prev.fold(bw)(p => graft.operators.Scd.cdcWinners(
-        p.unionByName(bw), "user_id", order))
+      save(prev.fold(bw)(p => graft.operators.Scd.cdcWinners(
+        p.unionByName(bw), "user_id", order)))
     }
       .where(col("op") =!= "D")
       .select(col("user_id"), col("event_id").as("last_event_id"),
@@ -1399,11 +1441,11 @@ object StreamingIngest {
     val wire = StructType(Seq(
       StructField("k", LongType), StructField("g", StringType)))
     val regs = ss.fold(ss.read(wire), // batch 1+: idempotent max folds
-        () => ss.stage(src.where(col("k") >= mid), oneFile = false)) { (batch, prev) =>
+        () => ss.stage(src.where(col("k") >= mid), oneFile = false)) { (batch, prev, save) =>
       val delta = graft.operators.HyperLogLog.build(batch, "k", Seq("g"))
-      prev.fold(delta)(_.unionByName(delta)
+      save(prev.fold(delta)(_.unionByName(delta)
         .groupBy(col("g"), col("bucket"))
-        .agg(max(col("reg")).as("reg")))
+        .agg(max(col("reg")).as("reg"))))
     }
     val est = graft.operators.HyperLogLog.estimate(regs, Seq("g"))
     val exact = items.groupBy(col(groupCol).as("g"))
@@ -1439,13 +1481,13 @@ object StreamingIngest {
     val wire = StructType(Seq(
       StructField("k", LongType), StructField("g", StringType)))
     val sk = ss.fold(ss.read(wire), // batch 1+: idempotent k-min folds
-        () => ss.stage(src.where(col("k") >= mid), oneFile = false)) { (batch, prev) =>
+        () => ss.stage(src.where(col("k") >= mid), oneFile = false)) { (batch, prev, save) =>
       val delta = graft.operators.Kmv.build(batch, "k", "g", k)
         .select(col("g"), explode(col("kmv")).as("h"))
-      prev.fold(delta)(_.unionByName(delta).distinct())
+      save(prev.fold(delta)(_.unionByName(delta).distinct())
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("g")).orderBy(col("h"))))
-        .where(col("rn") <= k).drop("rn")
+        .where(col("rn") <= k).drop("rn"))
     }
       .groupBy(col("g"))
       .agg(array_sort(collect_set(col("h"))).as("kmv"))
@@ -1487,13 +1529,13 @@ object StreamingIngest {
       StructField("u", LongType), StructField("dd", StringType)))
     val store = ss.fold(ss.read(wire), // batch 1+: idempotent min/max folds
         () => ss.stage(src.where(expr(s"unix_date(to_date(dd)) >= $mid")),
-          oneFile = false)) { (batch, prev) =>
+          oneFile = false)) { (batch, prev, save) =>
       val delta = batch.groupBy(col("u"))
         .agg(min(col("dd")).as("first_d"), max(col("dd")).as("last_d"))
-      prev.fold(delta)(_.unionByName(delta))
+      save(prev.fold(delta)(_.unionByName(delta))
         .groupBy(col("u"))
         .agg(min(col("first_d")).as("first_d"),
-          max(col("last_d")).as("last_d"))
+          max(col("last_d")).as("last_d")))
     }
       .select(col("u"), to_date(col("first_d")).as("first_d"),
         to_date(col("last_d")).as("last_d"))

@@ -15,124 +15,160 @@ class StreamingIngestSpec extends SparkSpec {
   test("sequencedTws: transformWithState ValueState continues across micro-batches") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val input = MemoryStream[ToolCall]
+    val q = withRocksDbStateStore(spark)(sequencedTws(input.toDS())
+      .writeStream.format("memory").queryName("seqtws")
+      .option("checkpointLocation",
+        Files.createTempDirectory("twsckpt").toString)
+      .outputMode(OutputMode.Append).start())
     try {
-      val input = MemoryStream[ToolCall]
-      val q = sequencedTws(input.toDS())
-        .writeStream.format("memory").queryName("seqtws")
-        .option("checkpointLocation",
-          Files.createTempDirectory("twsckpt").toString)
-        .outputMode(OutputMode.Append).start()
-      try {
-        input.addData(
-          ToolCall("m1", "s1", "click", ts("2024-01-01 00:00:01"), 1.0),
-          ToolCall("m2", "s1", "view", ts("2024-01-01 00:00:02"), 2.0),
-          ToolCall("m9", "s2", "click", ts("2024-01-01 00:00:03"), 3.0))
-        q.processAllAvailable()
-        input.addData(
-          ToolCall("m3", "s1", "purchase", ts("2024-01-01 00:10:00"), 4.0))
-        q.processAllAvailable()
-        val rows = spark.table("seqtws").as[SequencedCall].collect()
-          .map(r => (r.memoryId, r.sequenceOrder, r.precedingMemoryId)).toSet
-        assert(rows == Set(
-          ("m1", 1, None), ("m2", 2, Some("m1")), ("m9", 1, None),
-          ("m3", 3, Some("m2")))) // continues s1's state across batches
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
+      input.addData(
+        ToolCall("m1", "s1", "click", ts("2024-01-01 00:00:01"), Some(1.0)),
+        ToolCall("m2", "s1", "view", ts("2024-01-01 00:00:02"), Some(2.0)),
+        ToolCall("m9", "s2", "click", ts("2024-01-01 00:00:03"), Some(3.0)))
+      q.processAllAvailable()
+      input.addData(
+        ToolCall("m3", "s1", "purchase", ts("2024-01-01 00:10:00"), Some(4.0)))
+      q.processAllAvailable()
+      val rows = spark.table("seqtws").as[SequencedCall].collect()
+        .map(r => (r.memoryId, r.sequenceOrder, r.precedingMemoryId)).toSet
+      assert(rows == Set(
+        ("m1", 1, None), ("m2", 2, Some("m1")), ("m9", 1, None),
+        ("m3", 3, Some("m2")))) // continues s1's state across batches
+    } finally q.stop()
   }
 
   test("sessionsTws: later-event close emits inline, open session emits via timer") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val input = MemoryStream[UserEvent]
+    val q = withRocksDbStateStore(spark)(sessionsTws(input.toDS(), watermark = "10 minutes")
+      .writeStream.format("memory").queryName("twssess")
+      .option("checkpointLocation",
+        Files.createTempDirectory("twssess").toString)
+      .outputMode(OutputMode.Append).start())
     try {
-      val input = MemoryStream[UserEvent]
-      val q = sessionsTws(input.toDS(), watermark = "10 minutes")
-        .writeStream.format("memory").queryName("twssess")
-        .option("checkpointLocation",
-          Files.createTempDirectory("twssess").toString)
-        .outputMode(OutputMode.Append).start()
-      try {
-        // session A: two events 10 min apart (one session, sum 1.5+2.25)
-        input.addData(
-          UserEvent(1L, ts("2024-01-01 10:00:00"), 1.5),
-          UserEvent(1L, ts("2024-01-01 10:10:00"), 2.25))
+      // session A: two events 10 min apart (one session, sum 1.5+2.25)
+      input.addData(
+        UserEvent(1L, ts("2024-01-01 10:00:00"), 1.5),
+        UserEvent(1L, ts("2024-01-01 10:10:00"), 2.25))
+      q.processAllAvailable()
+      assert(spark.table("twssess").isEmpty) // still open, nothing emits
+      // an event PAST the gap closes session A inline and opens B
+      input.addData(UserEvent(1L, ts("2024-01-01 12:00:00"), 4.0))
+      q.processAllAvailable()
+      val inline = spark.table("twssess").as[SessionOut].collect()
+      assert(inline.map(s => (s.nEvents, s.sumValue)).toSeq == Seq((2L, 3.75)))
+      // watermark pushes (two batches) fire B's timer
+      for (h <- Seq("14:00:00", "15:00:00")) {
+        input.addData(UserEvent(9L, ts(s"2024-01-01 $h"), 0.0))
         q.processAllAvailable()
-        assert(spark.table("twssess").isEmpty) // still open, nothing emits
-        // an event PAST the gap closes session A inline and opens B
-        input.addData(UserEvent(1L, ts("2024-01-01 12:00:00"), 4.0))
-        q.processAllAvailable()
-        val inline = spark.table("twssess").as[SessionOut].collect()
-        assert(inline.map(s => (s.nEvents, s.sumValue)).toSeq == Seq((2L, 3.75)))
-        // watermark pushes (two batches) fire B's timer
-        for (h <- Seq("14:00:00", "15:00:00")) {
-          input.addData(UserEvent(9L, ts(s"2024-01-01 $h"), 0.0))
-          q.processAllAvailable()
-        }
-        val all = spark.table("twssess").as[SessionOut].collect()
-          .filter(_.userId == 1L)
-          .map(s => (s.sessionStart.toString, s.nEvents, s.sumValue)).toSet
-        assert(all == Set(
-          ("2024-01-01 10:00:00.0", 2L, 3.75),
-          ("2024-01-01 12:00:00.0", 1L, 4.0)))
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
-    }
+      }
+      val all = spark.table("twssess").as[SessionOut].collect()
+        .filter(_.userId == 1L)
+        .map(s => (s.sessionStart.toString, s.nEvents, s.sumValue)).toSet
+      assert(all == Set(
+        ("2024-01-01 10:00:00.0", 2L, 3.75),
+        ("2024-01-01 12:00:00.0", 1L, 4.0)))
+    } finally q.stop()
   }
 
-  test("ingestBatch: store-backed sequence continuation and provenance chaining") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("graft-store").toString + "/mem"
-    val b1 = Seq(
-      ("m1", "s1", "click", ts("2024-01-01 00:00:01"), 1.0),
-      ("m2", "s1", "view", ts("2024-01-01 00:00:02"), 2.0))
-      .toDF("memory_id", "session_id", "tool", "timestamp", "value")
-    val b2 = Seq(
-      ("m3", "s1", "purchase", ts("2024-01-01 00:20:00"), 3.0),
-      ("m4", "s2", "click", ts("2024-01-01 00:21:00"), 4.0))
-      .toDF("memory_id", "session_id", "tool", "timestamp", "value")
-    ingestBatch(b1, store)
-    ingestBatch(b2, store)
-    val got = spark.read.parquet(store)
+  private def call(id: String, session: String, tool: String, t: String,
+      v: Double): String =
+    s"""{"memory_id":"$id","session_id":"$session","tool":"$tool","timestamp":"2024-01-01T${t}Z","value":$v}"""
+
+  /** Stage `lines` as the next JSONL file of `in`: written aside, then
+    * moved in, so the file source never lists a half-written file. */
+  private def stageFile(in: java.nio.file.Path, lines: String*): Unit = {
+    val name = f"${in.toFile.list().length}%03d.jsonl"
+    val tmp = Files.createTempFile("graft-stage", ".jsonl")
+    Files.writeString(tmp, lines.mkString("", "\n", "\n"))
+    Files.move(tmp, in.resolve(name), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** (memory_id, sequence_order, preceding_memory_id) of every stored row. */
+  private def storedRows(store: String): Seq[(String, Int, Option[String])] =
+    spark.read.parquet(store)
       .select("memory_id", "sequence_order", "preceding_memory_id")
-      .collect().map(r => (r.getString(0), r.getInt(1), Option(r.getString(2)))).toSet
-    assert(got == Set(
+      .collect().map(r => (r.getString(0), r.getInt(1), Option(r.getString(2)))).toSeq
+
+  /** Run each file through one startJsonlIngest query, one micro-batch per
+    * file, and return the store's rows. */
+  private def ingestFiles(files: Seq[String]*): Seq[(String, Int, Option[String])] = {
+    val root = Files.createTempDirectory("graft-ingest")
+    val in = Files.createDirectory(root.resolve("in"))
+    val store = root.resolve("store").toString
+    val q = startJsonlIngest(spark, in.toString, store, root.resolve("ckpt").toString)
+    try files.foreach { f => stageFile(in, f: _*); q.processAllAvailable() }
+    finally q.stop()
+    storedRows(store)
+  }
+
+  test("startJsonlIngest: state-backed sequence continuation and provenance chaining") {
+    val got = ingestFiles(
+      Seq(call("m1", "s1", "click", "00:00:01", 1.0),
+        call("m2", "s1", "view", "00:00:02", 2.0)),
+      Seq(call("m3", "s1", "purchase", "00:20:00", 3.0),
+        call("m4", "s2", "click", "00:21:00", 4.0)))
+    assert(got.size == 4)
+    assert(got.toSet == Set(
       ("m1", 1, None), ("m2", 2, Some("m1")),
-      ("m3", 3, Some("m2")), // continues from stored max + stored last id
+      ("m3", 3, Some("m2")), // continues from the state's next seq + last id
       ("m4", 1, None)))
   }
 
-  test("ingestBatch: a replayed batch is idempotent (at-least-once delivery)") {
-    import spark.implicits._
-    val store = Files.createTempDirectory("graft-store-replay").toString + "/mem"
-    val b1 = Seq(
-      ("m1", "s1", "click", ts("2024-01-01 00:00:01"), 1.0),
-      ("m2", "s1", "view", ts("2024-01-01 00:00:02"), 2.0))
-      .toDF("memory_id", "session_id", "tool", "timestamp", "value")
-    ingestBatch(b1, store)
-    ingestBatch(b1, store) // replay after simulated failure
-    // partial replay: one old row + one new row
-    val b2 = Seq(
-      ("m2", "s1", "view", ts("2024-01-01 00:00:02"), 2.0),
-      ("m3", "s1", "purchase", ts("2024-01-01 00:20:00"), 3.0))
-      .toDF("memory_id", "session_id", "tool", "timestamp", "value")
-    ingestBatch(b2, store)
-    val got = spark.read.parquet(store)
-      .select("memory_id", "sequence_order", "preceding_memory_id")
-      .collect().map(r => (r.getString(0), r.getInt(1), Option(r.getString(2)))).toSet
-    assert(got == Set(
+  test("startJsonlIngest: ids re-sent in later files are dropped (at-least-once delivery)") {
+    val b1 = Seq(call("m1", "s1", "click", "00:00:01", 1.0),
+      call("m2", "s1", "view", "00:00:02", 2.0))
+    val got = ingestFiles(
+      b1,
+      b1, // the whole file re-sent
+      // partial re-send: one old row + one new row
+      Seq(call("m2", "s1", "view", "00:00:02", 2.0),
+        call("m3", "s1", "purchase", "00:20:00", 3.0)))
+    assert(got.size == 3) // no id stored twice
+    assert(got.toSet == Set(
       ("m1", 1, None), ("m2", 2, Some("m1")), ("m3", 3, Some("m2"))))
+  }
+
+  test("startJsonlIngest: a batch re-run after a restart replaces its own files") {
+    val files = Seq(
+      Seq(call("m1", "s1", "click", "00:00:01", 1.0),
+        call("m2", "s1", "view", "00:00:02", 2.0),
+        call("m9", "s2", "click", "00:00:03", 9.0)),
+      Seq(call("m3", "s1", "purchase", "00:20:00", 3.0),
+        call("m4", "s2", "view", "00:21:00", 4.0)),
+      Seq(call("m5", "s1", "click", "00:30:00", 5.0),
+        call("m6", "s3", "click", "00:31:00", 6.0)))
+    val uninterrupted = ingestFiles(files: _*)
+
+    val root = Files.createTempDirectory("graft-restart")
+    val in = Files.createDirectory(root.resolve("in"))
+    val store = root.resolve("store").toString
+    val ckpt = root.resolve("ckpt")
+    def start() = startJsonlIngest(spark, in.toString, store, ckpt.toString)
+    val q1 = start()
+    try files.take(2).foreach { f => stageFile(in, f: _*); q1.processAllAvailable() }
+    finally q1.stop()
+    // forget that the last batch committed: the restarted query re-runs it
+    val commits = ckpt.resolve("commits")
+    val last = commits.toFile.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      stageFile(in, files(2): _*)
+      q2.processAllAvailable()
+    } finally q2.stop()
+    val got = storedRows(store)
+    assert(got.map(_._1).distinct.size == got.size, s"an id is stored twice: $got")
+    assert(got.toSet == uninterrupted.toSet)
+    assert(uninterrupted.size == 7)
+    // the store's state is in its checkpoint: a fresh checkpoint may not
+    // restart its sequences
+    intercept[IllegalArgumentException](
+      startJsonlIngest(spark, in.toString, store, root.resolve("other").toString))
   }
 
   test("startJsonlIngest: file-source stream parses JSONL and appends with state") {
@@ -143,7 +179,11 @@ class StreamingIngestSpec extends SparkSpec {
       """{"memory_id":"m1","session_id":"s1","tool":"click","timestamp":"2024-01-01T00:00:01Z","value":1.0}
         |{"memory_id":"m2","session_id":"s1","tool":"view","timestamp":"2024-01-01T00:00:02Z","value":2.0}
         |""".stripMargin)
+    val pinned = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    val confBefore = pinned.map(spark.conf.getOption)
     val q = startJsonlIngest(spark, inDir, store, ckpt)
+    assert(pinned.map(spark.conf.getOption) == confBefore) // the caller's conf is left as it was
     try {
       q.processAllAvailable()
       // follow mode: a second file arrives later (tail -f semantics)
@@ -151,8 +191,7 @@ class StreamingIngestSpec extends SparkSpec {
         """{"memory_id":"m3","session_id":"s1","tool":"purchase","timestamp":"2024-01-01T00:00:09Z","value":3.0}
           |""".stripMargin)
       q.processAllAvailable()
-      // each micro-batch reads its staged lines once: the second batch,
-      // which also reads the store, still reports its one input line
+      // each micro-batch reads its staged lines once and never the store
       assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq == Seq(2L, 1L))
     } finally q.stop()
     val got = spark.read.parquet(store)
