@@ -14,16 +14,9 @@ object GateSession {
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // Gate-scale streaming partition pins (r12 measurements: staged
-      // stateful gates at p4, frequent-pairs fold at p8). The harness owns
-      // these numbers; the operators read the conf and run with the
-      // session's own sizing when it is unset (production).
-      .config("graft.stream.parts",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4"))
-      .config("graft.stream.parts.fp",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_FP", "8"))
-      .config("graft.stream.parts.ivj",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_IVJ", "2"))
+      // The staged streaming gates pin their own shuffle partitions for
+      // each stream run (streaming.StagedStream: 4, frequent pairs 8,
+      // interval join 2), whatever this session's count.
       // Incremental changelog per commit instead of a full RocksDB
       // snapshot — the recommended production mode for RocksDB state
       // stores, and measured ~5-9% off the heavier TWS gates here

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.Embedder
 import graft.search.Search
-import graft.streaming.StreamingIngest
+import graft.streaming.StagedRoundtrips
 import org.apache.spark.sql.functions._
 
 /** Structured Streaming folds and joins (`stream_*`). */
@@ -19,7 +19,7 @@ private[graft] object StreamGates {
     // the full-corpus pair join is already covered by
     // mine_frequent_pairs; this gate's job is the cross-batch fold.
     Gate("stream_frequent_pairs", (s, d) => {
-      streaming.StreamingIngest.stagedFrequentPairsRoundtrip(s,
+      StagedRoundtrips.stagedFrequentPairsRoundtrip(s,
         Tables.lineitem(s, d)
           .where(col("l_orderkey") % 2 === 0)
           .select(col("l_orderkey"), col("l_partkey")),
@@ -49,7 +49,7 @@ private[graft] object StreamGates {
     // (count 1+1) are found exactly and the fold must equal the batch
     // recompute — the oracle is dedup_substring_spans' SQL verbatim.
     Gate("stream_substring_spans", (s, d) => {
-      streaming.StreamingIngest.stagedSubstringSpansRoundtrip(s,
+      StagedRoundtrips.stagedSubstringSpansRoundtrip(s,
         docs(s, d), "text", "doc_id", k = 8,
         scratch("substream", d))
     },
@@ -65,7 +65,7 @@ private[graft] object StreamGates {
     // current store, sequentially — a batch-1 acceptance can reject a
     // batch-2 near-dup. The oracle unrolls both folds.
     Gate("stream_semantic_dedup", (s, d) => {
-      streaming.StreamingIngest.stagedSemanticDedupRoundtrip(s,
+      StagedRoundtrips.stagedSemanticDedupRoundtrip(s,
         Tables.embeddings(s, d), "vec_id", "embedding", "label",
         tau = 0.3, dims = 64,
         scratch("semstream", d))
@@ -112,7 +112,7 @@ private[graft] object StreamGates {
     // the additivity that makes CMS the stream sketch (state = depth ×
     // width cells forever, whatever the stream length).
     Gate("stream_cms_audit", (s, d) => {
-      streaming.StreamingIngest.stagedCmsRoundtrip(s,
+      StagedRoundtrips.stagedCmsRoundtrip(s,
         Tables.events(s, d), "user_id", depth = 4, width = 64,
         scratch("cmsstream", d))
         .orderBy(col("key"))
@@ -167,7 +167,7 @@ private[graft] object StreamGates {
     // with tombstones retained; argmax-by-sequence is associative, so
     // the fold == the one-pass batch MERGE and shares its oracle.
     Gate("stream_cdc_apply", (s, d) => {
-      streaming.StreamingIngest.stagedCdcRoundtrip(s, Tables.events(s, d),
+      StagedRoundtrips.stagedCdcRoundtrip(s, Tables.events(s, d),
         scratch("cdcstream", d))
         .orderBy(col("user_id"))
     },
@@ -180,7 +180,7 @@ private[graft] object StreamGates {
     // corrupt it (the property CMS lacks). Fold == one-pass batch audit
     // bit-for-bit; shares profile_hll_audit's oracle verbatim.
     Gate("stream_hll_audit", (s, d) => {
-      streaming.StreamingIngest.stagedHllRoundtrip(s,
+      StagedRoundtrips.stagedHllRoundtrip(s,
         Tables.events(s, d), "event_id", "event_type",
         scratch("hllstream", d))
         .orderBy(col("event_type"))
@@ -194,7 +194,7 @@ private[graft] object StreamGates {
     // and an exact order statistic — so the fold equals the one-pass
     // batch audit bit-for-bit and shares its oracle verbatim.
     Gate("stream_kmv_audit", (s, d) => {
-      streaming.StreamingIngest.stagedKmvRoundtrip(s,
+      StagedRoundtrips.stagedKmvRoundtrip(s,
         Tables.events(s, d), "user_id", "event_type", k = 64,
         scratch("kmvstream", d))
         .orderBy(col("event_type"))
@@ -207,7 +207,7 @@ private[graft] object StreamGates {
     // folded lifetimes, so the fold equals the one-pass batch KM
     // bit-for-bit and shares its oracle verbatim.
     Gate("stream_survival_km", (s, d) => {
-      streaming.StreamingIngest.stagedSurvivalRoundtrip(s,
+      StagedRoundtrips.stagedSurvivalRoundtrip(s,
         Tables.events(s, d), "user_id", "ts",
         scratch("survstream", d))
         .orderBy(col("t"))
@@ -221,7 +221,7 @@ private[graft] object StreamGates {
       val e = Tables.events(s, d).where(col("user_id") % 17 === 0)
         .select(col("user_id"), col("ts"), col("event_id"),
           col("event_type"), col("value"))
-      streaming.StreamingIngest.stagedScd2Roundtrip(s, e,
+      StagedRoundtrips.stagedScd2Roundtrip(s, e,
         scratch("scd2stream", d))
         .orderBy(col("user_id"), col("version"))
     },
@@ -234,7 +234,7 @@ private[graft] object StreamGates {
     // oracle SQL) — the streaming complement of hybrid search's sparse
     // ranking, matching how the reference continuously upserts.
     Gate("stream_bm25_stats", (s, d) => {
-      streaming.StreamingIngest.stagedBm25StatsRoundtrip(
+      StagedRoundtrips.stagedBm25StatsRoundtrip(
         s, docs(s, d).select(col("doc_id"), lower(col("text")).as("text")),
         scratch("bm25stream", d))
         .orderBy(col("term"))
@@ -263,7 +263,7 @@ private[graft] object StreamGates {
       val src = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       val work = scratch("stream_dedup", d)
-      StreamingIngest.stagedDedupRoundtrip(s, src, work)
+      StagedRoundtrips.stagedDedupRoundtrip(s, src, work)
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
           col("event_type"), col("value"))
@@ -282,7 +282,7 @@ private[graft] object StreamGates {
     Gate("stream_log_follow", (s, d) => {
       val src = Tables.events(s, d).select(col("event_id"), col("event_type"))
       val work = scratch("stream_log_follow", d)
-      StreamingIngest.stagedLogFollowRoundtrip(s, src, work)
+      StagedRoundtrips.stagedLogFollowRoundtrip(s, src, work)
         .orderBy(col("id"))
     },
       // follow-mode fold ≡ one-shot parse of all lines: the oracle is the
@@ -302,7 +302,7 @@ private[graft] object StreamGates {
           col("ts").as("timestamp"),
           col("value"))
       val work = scratch("stream_gate", d)
-      StreamingIngest.stagedIngestRoundtrip(s, src, work)
+      StagedRoundtrips.stagedIngestRoundtrip(s, src, work)
         .select(col("memory_id"), col("session_id"), col("tool"),
           col("sequence_order"), col("preceding_memory_id"))
         .orderBy(col("memory_id").cast("long"))
@@ -335,7 +335,7 @@ private[graft] object StreamGates {
           col("event_type").as("tool"),
           col("ts"), col("value"))
       val work = scratch("stream_twsmap", d)
-      StreamingIngest.stagedTwsSequencedRoundtrip(s, src, work, typed = true)
+      StagedRoundtrips.stagedTwsSequencedRoundtrip(s, src, work, typed = true)
         .select(col("memoryId").as("memory_id"),
           col("sessionId").as("session_id"), col("tool"),
           col("toolSeq").as("tool_seq"))
@@ -367,7 +367,7 @@ private[graft] object StreamGates {
         .groupBy(col("user_id").cast("string").as("key"), col("tsm").as("ts"))
         .agg(max(col("value")).as("refValue"))
       val work = scratch("stream_twsasof", d)
-      StreamingIngest.stagedAsofRoundtrip(s, ticks, updates, work, tws = true)
+      StagedRoundtrips.stagedAsofRoundtrip(s, ticks, updates, work, tws = true)
         .select(col("key"), col("tickId").as("tick_id"),
           col("tsMs").as("ts_ms"), col("matchedTsMs").as("matched_ts_ms"),
           col("matchedValue").as("matched_value"))
@@ -401,7 +401,7 @@ private[graft] object StreamGates {
         .where(col("event_id") % 3 === 0)
         .select(col("user_id").as("userId"), col("ts"), col("value"))
       val work = scratch("stream_twssess", d)
-      StreamingIngest.stagedTwsSessionRoundtrip(s, src, work)
+      StagedRoundtrips.stagedTwsSessionRoundtrip(s, src, work)
         .select(col("userId").as("user_id"),
           date_format(col("sessionStart"),
             "yyyy-MM-dd HH:mm:ss.SSSSSS").as("session_start"),
@@ -441,7 +441,7 @@ private[graft] object StreamGates {
           col("event_type").as("tool"),
           col("ts"), col("value"))
       val work = scratch("stream_tws", d)
-      StreamingIngest.stagedTwsSequencedRoundtrip(s, src, work)
+      StagedRoundtrips.stagedTwsSequencedRoundtrip(s, src, work)
         .select(col("memoryId").as("memory_id"),
           col("sessionId").as("session_id"), col("tool"),
           col("sequenceOrder").as("sequence_order"),
@@ -477,7 +477,7 @@ private[graft] object StreamGates {
           col("ts").as("timestamp"),
           col("value"), col("props"))
       val work = scratch("stream_search", d)
-      val store = StreamingIngest.stagedIngestRoundtrip(s, src, work)
+      val store = StagedRoundtrips.stagedIngestRoundtrip(s, src, work)
       val mem = store
         .withColumn("content",
           concat(lit("Tool: "), col("tool"), lit("\n"), col("props")))
@@ -509,7 +509,7 @@ private[graft] object StreamGates {
       val src = Tables.events(s, d)
         .select(col("ts"), col("event_type"), col("value"))
       val work = scratch("stream_rollup", d)
-      StreamingIngest.stagedRollupRoundtrip(s, src, work)
+      StagedRoundtrips.stagedRollupRoundtrip(s, src, work)
         .select(date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy(col("hour"), col("event_type"))
@@ -529,7 +529,7 @@ private[graft] object StreamGates {
         .where(col("event_id") % 3 === 0) // bounded gate slice, like X34's
         .select(col("ts"), col("user_id"), col("value"))
       val work = scratch("stream_sess", d)
-      StreamingIngest.stagedSessionRoundtrip(s, src, work)
+      StagedRoundtrips.stagedSessionRoundtrip(s, src, work)
         .select(col("user_id"),
           date_format(col("win.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("session_start"),
           col("n_events"), col("sum_value"))
@@ -570,7 +570,7 @@ private[graft] object StreamGates {
         .groupBy(col("user_id").cast("string").as("key"), col("tsm").as("ts"))
         .agg(max(col("value")).as("refValue"))
       val work = scratch("stream_asof", d)
-      StreamingIngest.stagedAsofRoundtrip(s, ticks, updates, work)
+      StagedRoundtrips.stagedAsofRoundtrip(s, ticks, updates, work)
         .select(col("key"), col("tickId").as("tick_id"),
           col("tsMs").as("ts_ms"), col("matchedTsMs").as("matched_ts_ms"),
           col("matchedValue").as("matched_value"))
@@ -606,7 +606,7 @@ private[graft] object StreamGates {
         .select(col("user_id").as("key"), col("ts"),
           col("event_id").as("id"))
       val work = scratch("stream_ivj", d)
-      StreamingIngest.stagedIntervalJoinRoundtrip(
+      StagedRoundtrips.stagedIntervalJoinRoundtrip(
         s, side("view"), side("click"), work)
         .select(col("key").as("user_id"), col("l_id").as("view_id"),
           date_format(col("l_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("view_ts"),
@@ -637,7 +637,7 @@ private[graft] object StreamGates {
         .select(col("user_id").as("key"), col("ts"),
           col("event_id").as("id"))
       val work = scratch("stream_ivjo", d)
-      StreamingIngest.stagedIntervalJoinRoundtrip(
+      StagedRoundtrips.stagedIntervalJoinRoundtrip(
         s, side("view"), side("click"), work, joinType = "left_outer")
         .select(col("key").as("user_id"), col("l_id").as("view_id"),
           date_format(col("l_ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("view_ts"),
@@ -663,7 +663,7 @@ private[graft] object StreamGates {
     // the folded z must equal the one-pass batch test bit-for-bit — the
     // gate shares events_ab_ztest's oracle verbatim.
     Gate("stream_ab_ztest", (s, d) => {
-      streaming.StreamingIngest.stagedAbZtestRoundtrip(s, Tables.events(s, d),
+      StagedRoundtrips.stagedAbZtestRoundtrip(s, Tables.events(s, d),
         scratch("stream_abz", d))
     },
     // additive fold == one-pass batch test, so the streaming gate shares
@@ -701,7 +701,7 @@ private[graft] object StreamGates {
     // at read time over the folded store must equal the batch
     // events_rolling_actives gate row-for-row — shared oracle.
     Gate("stream_rolling_actives_fold", (s, d) => {
-      streaming.StreamingIngest.stagedRollingActivesRoundtrip(s,
+      StagedRoundtrips.stagedRollingActivesRoundtrip(s,
         Tables.events(s, d),
         scratch("stream_wau", d))
     },
@@ -718,7 +718,7 @@ private[graft] object StreamGates {
     // over boundary grain); must equal the batch gate bit-for-bit,
     // oracle shared verbatim.
     Gate("stream_peak_concurrency", (s, d) => {
-      streaming.StreamingIngest.stagedPeakConcurrencyRoundtrip(s,
+      StagedRoundtrips.stagedPeakConcurrencyRoundtrip(s,
         Tables.events(s, d),
         scratch("stream_conc", d))
     },

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** One staged-JSONL streaming run — the machinery every
-  * `staged*Roundtrip` correctness harness in [[StreamingIngest]] shares,
+  * `staged*Roundtrip` correctness harness in [[StagedRoundtrips]] shares,
   * so each harness holds only its wire schema, its stagings, the
   * operator under test and the final read.
   *
@@ -14,15 +14,25 @@ import org.apache.spark.sql.types._
   * ([[stage]]), reads them back as a file-source stream ([[read]]),
   * starts ONE query ([[toMemory]], [[fold]] or [[run]]), drains it with
   * `processAllAvailable` after the start and after each step, and stops
-  * it in `finally`. The whole run holds the gate-scale partition pin
-  * (`partsKey`, see [[StagedStream.gatePartsPinned]]): it is captured at
-  * query start, and fold plans read the session conf on every batch.
+  * it in `finally`.
+  *
+  * The whole run pins `spark.sql.shuffle.partitions` to `parts`: state
+  * stores capture it at query start, and fold plans read it on every
+  * batch. At gate scale each stateful operator commits one state store
+  * per shuffle partition per micro-batch and each fold writes and reads
+  * one parquet file per partition per action, so 32 partitions are fixed
+  * overhead (re-measured across the unpinned gates against p4:
+  * stream_dedup 12.5 -> 3.1 s, stream_hourly_rollup 8.1 -> 3.2 s,
+  * stream_substring_spans 7.8 -> 4.5 s, stream_survival_km 6.6 -> 4.1 s,
+  * every other gate at or under its p32 time). The pin mutates the shared
+  * session conf and restores it after, which is only correct because
+  * gates run one at a time on one session.
+  *
   * For transformWithState operators (`rocksDb`) the query starts under
   * [[StreamingIngest.withRocksDbStateStore]].
   */
 private[streaming] final class StagedStream(spark: SparkSession,
-    workDir: String, partsKey: String = "graft.stream.parts",
-    rocksDb: Boolean = false) {
+    workDir: String, parts: Int = 4, rocksDb: Boolean = false) {
 
   {
     val root = new org.apache.hadoop.fs.Path(workDir)
@@ -68,10 +78,19 @@ private[streaming] final class StagedStream(spark: SparkSession,
     (new java.sql.Timestamp((b.getTimestamp(0).getTime + hi.getTime) / 2), hi)
   }
 
+  /** Mean of `c` over `df`: the key that splits a fold's input into its
+    * two stagings. */
+  def keyMid(df: DataFrame, c: String): Double = {
+    val r = df.agg(avg(col(c))).collect()(0)
+    require(!r.isNullAt(0), s"StagedStream: no $c to split on in $workDir")
+    r.getDouble(0)
+  }
+
   /** Start a query under the run's pins, drain it, then run each step and
     * drain again; the query stops even if a step fails. */
   def run(start: => StreamingQuery, steps: (() => Unit)*): Unit =
-    StagedStream.gatePartsPinned(spark, partsKey) {
+    StreamingIngest.withConf(spark,
+        Seq("spark.sql.shuffle.partitions" -> parts.toString)) {
       val q = if (rocksDb) StreamingIngest.withRocksDbStateStore(spark)(start) else start
       try {
         q.processAllAvailable()
@@ -112,41 +131,4 @@ private[streaming] final class StagedStream(spark: SparkSession,
     spark.read.parquet(latest.getOrElse(
       sys.error(s"StagedStream.fold: no micro-batch ran in $workDir")))
   }
-}
-
-private[streaming] object StagedStream {
-
-  /** Pin the session's shuffle/state partition count for a stream's
-    * lifetime (captured at `.start()` for the state stores and read
-    * per-batch by foreachBatch fold plans), restoring the previous value
-    * after. The pin value comes from the session conf `confKey`
-    * (`graft.stream.parts` by default) — when the conf is UNSET the body
-    * runs with the session's own sizing untouched, so production callers
-    * never inherit a benchmark-scale constant from library code; the
-    * gate harnesses (Bench/Verify) set the conf to the measured
-    * gate-scale value. At gate scale every stateful operator commits one
-    * state store per shuffle partition per micro-batch and every fold
-    * writes/reads `partitions` parquet files per action, so 32
-    * partitions are pure fixed overhead (r9 measurement; re-A/B'd r12
-    * across all unpinned gates: stream_dedup 12.5 -> 3.1 s,
-    * stream_hourly_rollup 8.1 -> 3.2 s, stream_substring_spans
-    * 7.8 -> 4.5 s, stream_survival_km 6.6 -> 4.1 s at p4, every other
-    * gate at or under its p32 time).
-    *
-    * NOT reentrant / NOT thread-safe: it mutates the shared session conf
-    * and restores the captured previous value, which is only correct
-    * because gates run strictly sequentially on one session. A
-    * concurrent-gate harness would race the pins — pin per-query via a
-    * cloned session instead if that ever changes.
-    */
-  def gatePartsPinned[T](spark: SparkSession,
-      confKey: String = "graft.stream.parts")(body: => T): T =
-    spark.conf.getOption(confKey) match {
-      case None => body
-      case Some(n) =>
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n)
-        try body
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
 }

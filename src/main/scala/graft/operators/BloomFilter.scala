@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * most depth·n rows, distinct — which broadcasts for probes exactly like
   * the dense bitmap would, and unions ACROSS BATCHES idempotently (set
   * bits are a max-fold like HLL registers: replay-safe, order-free;
-  * [[graft.streaming.StreamingIngest.stagedHllRoundtrip]] shows the fold
-  * shape, bloom's is identical so it carries no separate streaming gate).
+  * [[graft.streaming.Folds.hllRegisters]] is the fold shape, bloom's is
+  * identical so it carries no separate streaming gate).
   *
   * Probe semantics: claimed-member iff ALL depth positions are set. No
   * false negatives ever; false positives exactly when every position

@@ -76,9 +76,8 @@ object Kmv {
     import spark.implicits._
     df
       // null keys are dropped BEFORE hashing: a null hash would hit the
-      // non-nullable Long of the typed encoder at runtime, and both the
-      // exact side (countDistinct) and the streaming twin
-      // (stagedKmvRoundtrip) already ignore nulls
+      // non-nullable Long of the typed encoder at runtime, and the exact
+      // side (countDistinct) ignores nulls too
       .where(col(keyCol).isNotNull)
       .select(col(groupCol).cast("string").as("g"),
         HashFunctions.hash64(col(keyCol).cast("string")).as("h"))

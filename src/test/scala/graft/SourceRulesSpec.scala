@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Source rules for `src/main`: each operator has one public form, and
   * nothing it caches outlives the call. No `*Managed` twin, no release
   * handle, and no `.persist(` or `.cache()` outside `readOnce`, the one
-  * scoped cache (operators that return a plan checkpoint instead). */
+  * scoped cache (operators that return a plan checkpoint instead). The
+  * gate harnesses live in `src/gates`, not in the library. */
 class SourceRulesSpec extends AnyFunSuite {
 
   /** (file, line number, text) for every line of `src/main`. */
@@ -49,6 +50,14 @@ class SourceRulesSpec extends AnyFunSuite {
     val hits = code.filter { case (f, n, l) =>
       (l.contains(".persist(") || l.contains(".cache()")) &&
         !(f == file && n > start && n < end)
+    }
+    if (hits.nonEmpty) fail(report(hits))
+  }
+
+  test("no staged-stream gate harness or stream-partition conf in the library") {
+    val hits = lines.filter { case (_, _, l) =>
+      l.matches(""".*\bstaged\w*Roundtrip\b.*""") || l.contains("StagedStream") ||
+        l.contains("graft.stream.parts")
     }
     if (hits.nonEmpty) fail(report(hits))
   }

@@ -10,7 +10,7 @@ class KmvStreamSpec extends SparkSpec {
   test("stagedKmvRoundtrip: cross-batch fold equals the one-pass batch audit") {
     val items = (1 to 400).map(i => (i.toLong, if (i % 3 == 0) "a" else "b"))
       .toDF("id", "g")
-    val streamed = StreamingIngest.stagedKmvRoundtrip(spark, items,
+    val streamed = StagedRoundtrips.stagedKmvRoundtrip(spark, items,
       "id", "g", k = 16, "/tmp/graft_test_kmvstream")
       .orderBy(col("g"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),

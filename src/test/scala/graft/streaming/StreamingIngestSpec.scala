@@ -228,7 +228,7 @@ class StreamingIngestSpec extends SparkSpec {
       (i, new Timestamp(ts("2024-01-01 00:00:00").getTime + i * 1800 * 1000),
         if (i % 2 == 0) "click" else "view", i * 1.5)
     }.toDF("event_id", "ts", "event_type", "value")
-    val out = stagedDedupRoundtrip(spark, events,
+    val out = StagedRoundtrips.stagedDedupRoundtrip(spark, events,
       "/tmp/graft_spec_stream_dedup", watermark = "2 hours")
       .select("event_id", "event_type", "value")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
@@ -247,7 +247,7 @@ class StreamingIngestSpec extends SparkSpec {
       (5L, "alpha beta epsilon zeta"),
       (6L, "zeta zeta"))
       .toDF("doc_id", "text")
-    val got = stagedBm25StatsRoundtrip(spark, docs, "/tmp/graft_spec_stream_bm25")
+    val got = StagedRoundtrips.stagedBm25StatsRoundtrip(spark, docs, "/tmp/graft_spec_stream_bm25")
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     // full-corpus truth: df over distinct in-doc terms; N=6; Σdl=16
     val expected = Map(
@@ -268,7 +268,7 @@ class StreamingIngestSpec extends SparkSpec {
       (2L, "totally different words here"),
       (3L, "unrelated content again now")
     ).toDF("doc_id", "text")
-    val got = StreamingIngest.stagedSubstringSpansRoundtrip(spark, docs,
+    val got = StagedRoundtrips.stagedSubstringSpansRoundtrip(spark, docs,
       "text", "doc_id", k = 4, "/tmp/graft_spec_stream_substr")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq === Seq((0L, 1L, 4L, 4L), (1L, 2L, 5L, 4L)))
@@ -297,7 +297,7 @@ class StreamingIngestSpec extends SparkSpec {
       .orderBy(col("a"), col("b")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSeq
-    val staged = rows(StreamingIngest.stagedFrequentPairsRoundtrip(spark,
+    val staged = rows(StagedRoundtrips.stagedFrequentPairsRoundtrip(spark,
       items, "bk", "it", minSupport = 2, "/tmp/graft_spec_stream_fp"))
     val batch = rows(graft.operators.MarketBasket.frequentPairs(
       items, "bk", "it", minSupport = 2))
@@ -316,7 +316,7 @@ class StreamingIngestSpec extends SparkSpec {
       (2L, Seq(0.1f, 0.99f, 0f, 0f), 0), // ≈ v4 ONLY → rejected in batch 2
       (5L, Seq(0f, 0f, 1f, 0f), 0)       // fresh direction → accepted
     ).toDF("vec_id", "embedding", "label")
-    val got = StreamingIngest.stagedSemanticDedupRoundtrip(spark, vecs,
+    val got = StagedRoundtrips.stagedSemanticDedupRoundtrip(spark, vecs,
       "vec_id", "embedding", "label", tau = 0.5, dims = 4,
       "/tmp/graft_spec_stream_semdedup")
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getBoolean(2)))).toMap
@@ -372,15 +372,19 @@ class StreamingIngestSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("asofEnrichStream: latest update at-or-before each tick, across batches") {
+  /** tickId -> (matched ts, matched value) from `asofEnrichStream`, or
+    * with `tws` from `asofEnrichTws`, over the same three micro-batches. */
+  private def asofRows(name: String, tws: Boolean): Map[String, (Option[Long], Option[Double])] = {
     implicit val sq = spark.sqlContext
     import spark.implicits._
     val tickIn = MemoryStream[Tick]
     val updIn = MemoryStream[RefUpdate]
-    val out = asofEnrichStream(tickIn.toDS(), updIn.toDS(), maxUpdatesPerKey = 2)
-    val q = out.writeStream.format("memory").queryName("asof")
+    val out = if (tws) asofEnrichTws(tickIn.toDS(), updIn.toDS(), maxUpdatesPerKey = 2)
+      else asofEnrichStream(tickIn.toDS(), updIn.toDS(), maxUpdatesPerKey = 2)
+    val start = () => out.writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", Files.createTempDirectory(name).toString)
       .outputMode(OutputMode.Append).start()
-    def t(s: String) = ts(s).getTime
+    val q = if (tws) withRocksDbStateStore(spark)(start()) else start()
     try {
       // batch 1: two updates and one tick for key A, interleaved in event
       // time within the batch; a tick with no update yet for key B
@@ -400,13 +404,41 @@ class StreamingIngestSpec extends SparkSpec {
         Tick("A", ts("2024-01-01 00:02:00"), "t4"),  // latest → 7.0
         Tick("A", ts("2024-01-01 00:00:15"), "t5"))  // before retained horizon → None
       q.processAllAvailable()
-      val rows = spark.table("asof").as[AsofMatch].collect()
+      spark.table(name).as[AsofMatch].collect()
         .map(m => m.tickId -> ((m.matchedTsMs, m.matchedValue))).toMap
-      assert(rows("t1") == ((Some(t("2024-01-01 00:00:10")), Some(1.0))))
-      assert(rows("t2") == ((Some(t("2024-01-01 00:00:30")), Some(3.0))))
-      assert(rows("t3") == ((None, None)))
-      assert(rows("t4") == ((Some(t("2024-01-01 00:01:00")), Some(7.0))))
-      assert(rows("t5") == ((None, None))) // update 00:00:10 was evicted by the cap
+    } finally q.stop()
+  }
+
+  test("asofEnrichStream: latest update at-or-before each tick, across batches") {
+    def t(s: String) = ts(s).getTime
+    val rows = asofRows("asof", tws = false)
+    assert(rows("t1") == ((Some(t("2024-01-01 00:00:10")), Some(1.0))))
+    assert(rows("t2") == ((Some(t("2024-01-01 00:00:30")), Some(3.0))))
+    assert(rows("t3") == ((None, None)))
+    assert(rows("t4") == ((Some(t("2024-01-01 00:01:00")), Some(7.0))))
+    assert(rows("t5") == ((None, None))) // update 00:00:10 was evicted by the cap
+    // the transformWithState twin folds the same batches to the same rows
+    assert(asofRows("asoftws", tws = true) == rows)
+  }
+
+  test("typeCountsTws: a call with no timestamp sorts first, as in sequencedTws") {
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[ToolCall]
+    val q = withRocksDbStateStore(spark)(typeCountsTws(input.toDS())
+      .writeStream.format("memory").queryName("typecnt")
+      .option("checkpointLocation",
+        Files.createTempDirectory("typecnt").toString)
+      .outputMode(OutputMode.Append).start())
+    try {
+      input.addData(
+        ToolCall("m2", "s1", "click", ts("2024-01-01 00:00:02"), Some(2.0)),
+        ToolCall("m1", "s1", "click", null, Some(1.0)),
+        ToolCall("m3", "s1", "view", ts("2024-01-01 00:00:01"), Some(3.0)))
+      q.processAllAvailable()
+      val rows = spark.table("typecnt").as[TypedSeq].collect()
+        .map(r => (r.memoryId, r.tool, r.toolSeq)).toSet
+      assert(rows == Set(("m1", "click", 1L), ("m2", "click", 2L), ("m3", "view", 1L)))
     } finally q.stop()
   }
 

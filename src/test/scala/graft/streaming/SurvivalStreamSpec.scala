@@ -14,7 +14,7 @@ class SurvivalStreamSpec extends SparkSpec {
       Seq((u.toLong, s"2024-01-0${1 + u % 3} 10:00:00"),
         (u.toLong, s"2024-01-${10 + u % 15} 10:00:00"))
     }.toDF("user_id", "ts").withColumn("ts", to_timestamp(col("ts")))
-    val streamed = StreamingIngest.stagedSurvivalRoundtrip(spark, ev,
+    val streamed = StagedRoundtrips.stagedSurvivalRoundtrip(spark, ev,
       "user_id", "ts", "/tmp/graft_test_survstream")
       .orderBy(col("t")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
